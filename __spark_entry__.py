@@ -872,8 +872,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q57_pagerank(spark, sf):
         """PageRank (5 power iterations, d=0.85, GraphX convention) over
-        the part co-order graph: one shuffle join + one map-side-
-        combinable agg per round, lineage cut each round.  Oracle =
+        the part co-order graph: edges partitioned by connected
+        component, all rounds as numpy passes per partition.  Oracle =
         the same five rounds unrolled as nested CTEs in DuckDB."""
         from redactify_spark.operators import graph_algs as G
         li = _t(spark, sf, "lineitem")
@@ -2663,8 +2663,9 @@ def oracle_sql() -> dict[str, str]:
     # ---- q46: connected components over the native pair edges ------------
     # DuckDB recursive CTE computes min-reachable-label per node -- the
     # exact semantics of operators/components.connected_components
-    # (hash-min propagation + pointer doubling), giving the CC operator
-    # a value-exact oracle.
+    # (per-partition union-find to the min node, then the same on the
+    # cross-partition root edges), giving the CC operator a value-exact
+    # oracle.
     sql["q46_components_native"] = f"""
         WITH RECURSIVE {simhash_pair_ctes},
         sym AS (SELECT id_a AS u, id_b AS v FROM simhash_pairs

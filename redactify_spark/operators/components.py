@@ -1,122 +1,129 @@
 """Connected components over the match graph (canonicalization core).
 
-GraphFrames is not a dependency; this is a native DataFrame
-implementation of iterative hash-min label propagation: every node
-starts labeled with itself, and each round adopts the minimum label in
-its closed neighborhood.  Rounds = graph diameter; entity-linking match
-graphs are unions of small near-duplicate clusters (diameter <= ~5), so
-convergence is fast.  For adversarial long chains the alternating
-large-star/small-star variant would cut rounds to O(log n); the simple
-propagation keeps the plan to one shuffle join + one aggregation per
-round, which wins for the shallow graphs this pipeline produces.
+GraphFrames is not a dependency.  Components are found by whole-array
+passes inside `mapInPandas`, with Spark only routing edges between them
+(the vectorized vertex-program shape of "Automating Vectorized
+Distributed Graph Computation", SIGMOD 2024):
 
-Scale mechanics:
-- each round is join(labels, edges) + groupBy(min) -- both shuffle on
-  the node key, so AQE reuses the same hash partitioning round to round;
-- lineage is cut with localCheckpoint every round (iterative plans
-  otherwise grow Catalyst trees exponentially); on a cluster the
-  checkpoint goes to the checkpoint dir / an Iceberg stage table
-  (plans/checkpoint.py);
-- convergence test is an aggregate count of changed labels (a cheap
-  boolean reduction, not a collect of the labels).
+- local pass: each edge partition runs union-find with path halving
+  over `np.unique` indices of its endpoints.  The union always hangs the
+  larger root under the smaller, and the smallest index is the smallest
+  node, so every local root is the min node of its local piece;
+- contraction: a node seen in several partitions has one local root per
+  partition.  One groupBy(node) keeps the smallest of them and emits a
+  cross edge (smallest root, other root) for each of the rest;
+- recursion: with no cross edges the local roots are the answer.
+  Otherwise the cross edges -- a graph over roots only -- are solved the
+  same way on half as many partitions, and each node maps through its
+  root.  One partition can have no cross edges, so the recursion ends
+  within ceil(log2 P) + 1 levels for P input partitions, with no round
+  cap and no per-round convergence count.
+
+Partitions that already hold whole components (the common case for
+entity-linking match graphs, which are unions of small near-duplicate
+clusters) give no cross edges, and the operator is a single pass.  Each
+partition's edges sit in one Python worker at a time.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def local_roots(u: np.ndarray, v: np.ndarray
+                ) -> tuple[np.ndarray, np.ndarray]:
+    """(nodes, roots): every endpoint of the undirected edges
+    (u[i], v[i]) with the min node of its component, by union-find with
+    path halving over sorted-unique indices."""
+    nodes, idx = np.unique(np.concatenate([u, v]), return_inverse=True)
+    parent = list(range(len(nodes)))
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    m = len(u)
+    for a, b in zip(idx[:m].tolist(), idx[m:].tolist()):
+        ra, rb = find(a), find(b)
+        if ra < rb:
+            parent[rb] = ra
+        elif rb < ra:
+            parent[ra] = rb
+    # every pointer goes to a smaller index, so pointer jumping reaches
+    # the roots in O(log depth) whole-array steps
+    p = np.asarray(parent, dtype=np.int64)
+    while True:
+        pp = p[p]
+        if np.array_equal(pp, p):
+            break
+        p = pp
+    return nodes, nodes[p]
+
+
+def _local_pass(batches):
+    """mapInPandas body: one partition's (u, v) edges -> (node, root)."""
+    frames = list(batches)
+    if not frames:
+        return
+    uv = pd.concat(frames, ignore_index=True)
+    nodes, roots = local_roots(uv["u"].to_numpy(), uv["v"].to_numpy())
+    yield pd.DataFrame({"node": nodes, "root": roots})
+
+
 def connected_components(edges: DataFrame,
                          src: str = "key_a", dst: str = "key_b",
-                         max_iter: int = 20,
                          reliable_checkpoint: bool = False) -> DataFrame:
     """Return (node, component) with component = min node id reachable.
 
-    `edges` is undirected input (one row per pair, either order).
+    `edges` is undirected input (one row per pair, either order); rows
+    with a null endpoint are ignored.  An empty edge frame gives an
+    empty result.
 
-    Lineage is cut each round.  Default: localCheckpoint (executor
-    block storage -- fastest; lost on executor death, Spark then
-    recomputes the cut plan which is fine at this graph's size).  Set
-    reliable_checkpoint=True on a real cluster with a configured
-    `spark.sparkContext.setCheckpointDir` to cut to fault-tolerant
-    storage instead (the right call when a round's labels are expensive
-    to recompute at 10^9+ nodes).
-    """
+    Each level's frames are cut with a lazy localCheckpoint (executor
+    block storage; lost on executor death, Spark then recomputes the
+    cut plan).  Set reliable_checkpoint=True on a real cluster with a
+    configured `spark.sparkContext.setCheckpointDir` to cut to
+    fault-tolerant storage instead."""
     def cut(df: DataFrame) -> DataFrame:
-        # lazy: the convergence-check count right after each cut is the
-        # job that materializes the blocks -- an eager cut would run a
-        # second, separate blocking job per round for nothing
-        return (df.checkpoint() if reliable_checkpoint
+        # lazy: the cut's upstream shuffle stages run now, its own
+        # partitions inside the next consuming job
+        return (df.checkpoint(eager=False) if reliable_checkpoint
                 else df.localCheckpoint(eager=False))
 
-    # the per-round neighbor-min joins on `v`: hash-partition + sort +
-    # persist ONCE (lazy -- round 1's convergence count materializes it
-    # with the cache live; later rounds hit the cache.  Same pattern as
-    # graph_algs.pagerank)
-    n_shuffle = int(edges.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"))
-    sym = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-           .unionByName(edges.select(F.col(dst).alias("u"),
-                                     F.col(src).alias("v")))
-           .dropDuplicates(["u", "v"])
-           .repartition(n_shuffle, "v")
-           .sortWithinPartitions("v").persist())
+    uv = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+          .dropna())
+    return _components(uv, cut)
 
-    labels = (sym.select(F.col("u").alias("node"))
-              .distinct()
-              .withColumn("component", F.col("node")))
 
-    for _ in range(max_iter):
-        # 1) neighbor-min: each node adopts the min label in its closed
-        #    neighborhood
-        nbr = (sym.join(labels.withColumnRenamed("node", "v"), "v")
-               .groupBy(F.col("u").alias("node"))
-               .agg(F.min("component").alias("nbr_component")))
-        stepped = (labels.join(nbr, "node", "left")
-                   .select("node", F.col("component").alias("_old"),
-                           F.least(F.col("component"),
-                                   F.coalesce(F.col("nbr_component"),
-                                              F.col("component")))
-                           .alias("component"))
-                   # lazy barrier: the pointer-doubling self-join below
-                   # consumes `stepped` twice -- without the cut the
-                   # neighbor-min join subtree runs once per side
-                   .localCheckpoint(eager=False))
-        # 2) pointer doubling: component := label(component) -- halves the
-        #    pointer-chain depth each round, so chains converge in
-        #    O(log n) rounds instead of O(n)
-        parent = stepped.select(F.col("node").alias("component"),
-                                F.col("component").alias("grand"))
-        new_labels = (stepped.join(parent, "component", "left")
-                      .select("node", "_old",
-                              F.least(F.col("component"),
-                                      F.coalesce(F.col("grand"),
-                                                 F.col("component")))
-                              .alias("component")))
-        new_labels = cut(new_labels)
-        # convergence: the pre-round label is CARRIED inline ("_old"),
-        # so the changed-check is a scan of the just-materialized cut
-        # blocks -- the old formulation re-joined the full old and new
-        # label tables (two more exchanges per round) just to compare
-        changed = (new_labels
-                   .where(F.col("component") != F.col("_old"))
-                   .limit(1).count())
-        labels = new_labels.drop("_old")
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds; "
-            "raise max_iter (graph deeper than 2^max_iter?)")
-    # the returned labels are materialized localCheckpoint blocks (the
-    # convergence count built them); drop the edge cache so no
-    # plan-keyed entry outlives the invocation -- the incremental
-    # pipelines rewrite their stage tables between refreshes and a
-    # stale CacheManager hit here silently canonicalizes against the
-    # OLD edge set (caught by test_incremental_equals_oneshot)
-    sym.unpersist()
-    return labels
+def _components(uv: DataFrame, cut) -> DataFrame:
+    key_type = dict(uv.dtypes)["u"]
+    roots = cut(uv.mapInPandas(_local_pass,
+                               f"node {key_type}, root {key_type}"))
+    n_parts = roots.rdd.getNumPartitions()
+    if n_parts <= 1:
+        # one partition saw every edge: each node has its final root
+        return roots.withColumnRenamed("root", "component")
+    labels = cut(roots.groupBy("node")
+                 .agg(F.min("root").alias("component"),
+                      F.collect_set("root").alias("_roots")))
+    cross = (labels.where(F.size("_roots") > 1)
+             .select(F.col("component").alias("u"),
+                     F.explode("_roots").alias("v"))
+             .where(F.col("u") != F.col("v")))
+    labels = labels.drop("_roots")
+    if cross.isEmpty():
+        return labels
+    merged = _components(cross.coalesce(max(1, n_parts // 2)), cut)
+    return (labels.join(merged.select(F.col("node").alias("component"),
+                                      F.col("component").alias("_final")),
+                        "component", "left")
+            .select("node", F.coalesce("_final", "component")
+                    .alias("component")))
 
 
 def canonical_map(mentions: DataFrame, edges: DataFrame) -> DataFrame:

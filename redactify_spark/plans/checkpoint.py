@@ -242,11 +242,7 @@ def _entity_salience(nodes: DataFrame, edges: DataFrame) -> DataFrame:
            .unionByName(edges.select(F.col("dst").alias("src"),
                                      F.col("src").alias("dst"), "weight"))
            .groupBy("src", "dst").agg(F.max("weight").alias("weight")))
-    # checkpoint_every=3: with 5 iterations this cuts lineage twice
-    # (rounds 3 and 5) instead of three times -- one fewer
-    # materialization job, and a 3-round join tree is still shallow
-    ranks = pagerank(sym, weight="weight", iterations=5,
-                     checkpoint_every=3)
+    ranks = pagerank(sym, weight="weight", iterations=5)
     return (nodes.join(ranks.withColumnRenamed("node", "canon_id"),
                        "canon_id", "left")
             .select("canon_id", "type", "n_mentions", "n_docs",

@@ -134,6 +134,46 @@ def test_pagerank_weighted_parallel_edges_summed(spark):
     assert a == b
 
 
+def _weighted_reference(triples, iterations=5, d=0.85):
+    """Pure-Python weighted PageRank (GraphX convention) over
+    (src, dst, weight) rows; parallel rows' weights add up."""
+    w = {}
+    for u, v, x in triples:
+        w[(u, v)] = w.get((u, v), 0.0) + x
+    nodes = {u for u, _ in w} | {v for _, v in w}
+    wsum = {}
+    for (u, _), x in w.items():
+        wsum[u] = wsum.get(u, 0.0) + x
+    r = {n: 1.0 for n in nodes}
+    for _ in range(iterations):
+        acc = {n: 0.0 for n in nodes}
+        for (u, v), x in w.items():
+            acc[v] += r[u] * x / wsum[u]
+        r = {n: (1 - d) + d * acc[n] for n in nodes}
+    return r
+
+
+def test_pagerank_components_strings_partitions(spark):
+    """Several components (rank never crosses one), string keys, a
+    dangling node, weights and a parallel edge, spread over 4
+    partitions."""
+    triples = [("acme", "bolt", 3.0), ("bolt", "acme", 1.0),
+               ("acme", "cog", 1.0), ("cog", "bolt", 2.0),
+               ("acme", "dud", 4.0),                 # dud is dangling
+               ("xeno", "yak", 2.0), ("yak", "xeno", 5.0),
+               ("yak", "xeno", 1.0),                 # parallel edge
+               ("pim", "quo", 1.0)]
+    expected = _weighted_reference(triples)
+    e = (spark.createDataFrame(triples,
+                               "src string, dst string, weight double")
+         .repartition(4))
+    out = {r.node: r.rank
+           for r in G.pagerank(e, weight="weight", iterations=5).collect()}
+    assert set(out) == set(expected)
+    for n, v in expected.items():
+        assert out[n] == pytest.approx(v, abs=1e-12), n
+
+
 def _brute_k_core(pairs, k):
     """Independent pure-Python peeling reference."""
     adj = {}

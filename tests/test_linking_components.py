@@ -79,13 +79,25 @@ def test_wide_bucket_metric(spark):
 
 # --- connected components (FIXTURES.md §6 component fixtures) -------------
 
-def cc(spark, pairs):
-    edges = spark.createDataFrame(pairs, "key_a string, key_b string")
+def _components(spark, pairs, parts):
+    edges = (spark.createDataFrame(pairs, "key_a string, key_b string")
+             .repartition(parts))
     rows = connected_components(edges).collect()
     comps = {}
     for r in rows:
         comps.setdefault(r.component, set()).add(r.node)
+    # component = min node of its members
+    assert all(c == min(m) for c, m in comps.items()), comps
     return sorted(sorted(v) for v in comps.values())
+
+
+def cc(spark, pairs):
+    """Components of `pairs` on 1 and on 8 round-robin partitions (the
+    latter splits components across partitions, so the cross-edge
+    recursion runs); both must agree."""
+    one = _components(spark, pairs, 1)
+    assert _components(spark, pairs, 8) == one
+    return one
 
 
 def test_cc_chain(spark):
@@ -101,6 +113,32 @@ def test_cc_star(spark):
 def test_cc_disjoint_pairs(spark):
     assert cc(spark, [("a", "b"), ("c", "d"), ("e", "f")]) == [
         ["a", "b"], ["c", "d"], ["e", "f"]]
+
+
+def test_cc_empty_edges(spark):
+    edges = spark.createDataFrame([], "key_a string, key_b string")
+    assert connected_components(edges).collect() == []
+    assert connected_components(edges.repartition(8)).collect() == []
+
+
+def test_cc_local_pass_long_random_chain():
+    """The per-partition union-find on a 100,000-node chain whose labels
+    are a random permutation (the worst case for min-label propagation,
+    which needs one round per hop): one component rooted at its min
+    label, in a few seconds, without Spark."""
+    import time
+
+    import numpy as np
+
+    from redactify_spark.operators.components import local_roots
+    n = 100_000
+    labels = np.random.default_rng(7).permutation(n).astype(np.int64) + 10
+    t0 = time.perf_counter()
+    nodes, roots = local_roots(labels[:-1], labels[1:])
+    elapsed = time.perf_counter() - t0
+    assert np.array_equal(nodes, np.arange(10, n + 10))
+    assert (roots == 10).all()
+    assert elapsed < 5.0, elapsed
 
 
 def test_canonical_map_singletons(spark):
@@ -161,8 +199,9 @@ def test_build_nodes_head_entity_two_phase(spark):
 
 
 def test_cc_long_chain_converges_fast(spark):
-    """Pointer doubling: a 100-node chain converges within the default
-    round budget (O(log n), not O(n))."""
+    """A 100-node chain is one component; split over 8 partitions it
+    needs the cross-edge recursion, whose depth is bounded by
+    log2(partitions), not by the chain length."""
     pairs = [(f"n{i:03d}", f"n{i+1:03d}") for i in range(100)]
     got = cc(spark, pairs)
     assert len(got) == 1 and len(got[0]) == 101
@@ -181,16 +220,6 @@ def test_cc_reliable_checkpoint(spark, tmp_path):
         comps.setdefault(r.component, set()).add(r.node)
     assert sorted(sorted(v) for v in comps.values()) == [
         ["a", "b", "c"], ["x", "y"]]
-
-
-def test_cc_nonconvergence_raises(spark):
-    from redactify_spark.operators.components import connected_components
-    edges = spark.createDataFrame(
-        [(f"n{i:03d}", f"n{i+1:03d}") for i in range(40)],
-        "key_a string, key_b string")
-    import pytest as _pt
-    with _pt.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iter=1)
 
 
 def test_edge_weight_counts_supporting_docs(spark):

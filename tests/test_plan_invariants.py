@@ -151,13 +151,16 @@ def test_q80_bm25_df_join_broadcast(spark, qs):
     Asserted on the operator output: the declared q80 adds a lazy
     localCheckpoint barrier before its orderBy (r6), and localCheckpoint
     -- even lazy -- replaces the visible logical plan with a LogicalRDD
-    scan, hiding the join subtree from explain()."""
+    scan, hiding the join subtree from explain().  The declared q80 plan
+    must still show that barrier: if it goes, the join subtree is
+    visible again and this check no longer covers what q80 runs."""
     from redactify_spark.operators import textstats as X
     d = spark.read.parquet(f"{SF}/documents.parquet")
     plan = plan_of(X.bm25_scores(d, ["spark", "vector", "stream"]))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    assert "Scan ExistingRDD" in plan_of(qs["q80_bm25"](spark, SF))
 
 
 def test_q81_linkage_blocked_equi_join(spark, qs):
