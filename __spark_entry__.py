@@ -695,24 +695,31 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .orderBy("key_a", "key_b"))
 
     def q34_components(spark, sf):
+        from redactify_spark.operators.components import canonical_map
         from redactify_spark.operators.detection import detect_mentions
-        from redactify_spark.operators.graph import materialize_graph
+        from redactify_spark.operators.linking import match_edges
         # deterministic subset: a global limit() picks arbitrary rows
         # under different parallelism; a key predicate does not
         pages = _pages_from_documents(spark, sf).where(F.col("doc_id") < 500)
-        m = detect_mentions(pages, id_col="doc_id", text_col="text")
-        nodes, edges, canon = materialize_graph(m, id_col="doc_id")
+        # persisted: linking and canonical_map both read the mentions, so
+        # the detection UDTF is evaluated exactly once
+        m = detect_mentions(pages, id_col="doc_id", text_col="text").persist()
+        canon = canonical_map(m, match_edges(m, threshold=0.6))
         return (canon.groupBy("canon_id")
                 .agg(F.count("*").cast("long").alias("n_members"))
                 .orderBy(F.col("n_members").desc(), "canon_id")
                 .limit(50))
 
     def q35_graph_nodes(spark, sf):
+        from redactify_spark.operators.components import canonical_map
         from redactify_spark.operators.detection import detect_mentions
-        from redactify_spark.operators.graph import materialize_graph
+        from redactify_spark.operators.graph import build_nodes_from_canon
+        from redactify_spark.operators.linking import match_edges
         pages = _pages_from_documents(spark, sf).where(F.col("doc_id") < 500)
-        m = detect_mentions(pages, id_col="doc_id", text_col="text")
-        nodes, edges, canon = materialize_graph(m, id_col="doc_id")
+        m = detect_mentions(pages, id_col="doc_id", text_col="text").persist()
+        canon = canonical_map(m, match_edges(m, threshold=0.6))
+        nodes = build_nodes_from_canon(m.join(canon, "pseudo_key"),
+                                       id_col="doc_id")
         return (nodes.select("canon_id", "type", "n_mentions", "n_docs")
                 .orderBy(F.col("n_docs").desc(), "canon_id").limit(50))
 

@@ -22,12 +22,19 @@ from pyspark.sql.window import Window
 TOP_K_SURFACES = 16
 
 
-def build_nodes(mentions: DataFrame, canon: DataFrame,
-                id_col: str = "doc_id",
-                top_k_surfaces: int = TOP_K_SURFACES) -> DataFrame:
-    """nodes(canon_id, type, surface_forms, n_mentions, n_docs).
+def build_nodes_from_canon(m: DataFrame, id_col: str = "doc_id",
+                           top_k_surfaces: int = TOP_K_SURFACES
+                           ) -> DataFrame:
+    """nodes(canon_id, type, surface_forms, n_mentions, n_docs) over
+    PRE-canonicalized mentions (canon_id already joined on).
+    plans/checkpoint.build_graph materializes mentions x canon ONCE
+    (stage 04b) and feeds both this and build_edges_from_canon -- the
+    mentions-sized pseudo_key shuffle join is paid once instead of
+    three times (measured: 05_nodes+06_edges were the worst-scaling
+    stages at 10^6 docs before the shared stage).
 
-    Scale shape (the build_edges two-phase pattern, applied to n_docs):
+    Scale shape (the build_edges_from_canon two-phase pattern, applied
+    to n_docs):
     - n_docs: distinct over the WIDE uniform key (canon_id, type, doc)
       -- partial aggregation dedups map-side and the hot entity's rows
       shuffle by doc, not by entity -- then a count(*) whose partial sums
@@ -40,20 +47,6 @@ def build_nodes(mentions: DataFrame, canon: DataFrame,
       window over the per-surface counts (cardinality = distinct
       surfaces, already collapsed), so the collected array is bounded at
       K elements and deterministic."""
-    return build_nodes_from_canon(mentions.join(canon, "pseudo_key"),
-                                  id_col=id_col,
-                                  top_k_surfaces=top_k_surfaces)
-
-
-def build_nodes_from_canon(m: DataFrame, id_col: str = "doc_id",
-                           top_k_surfaces: int = TOP_K_SURFACES
-                           ) -> DataFrame:
-    """build_nodes over PRE-canonicalized mentions (canon_id already
-    joined on).  kg_pipeline materializes mentions x canon ONCE (stage
-    04b) and feeds both this and build_edges_from_canon -- the
-    mentions-sized pseudo_key shuffle join is paid once instead of
-    three times (measured: 05_nodes+06_edges were the worst-scaling
-    stages at 10^6 docs before the shared stage)."""
     n_docs = (m.select("canon_id", "entity_group",
                        F.col(id_col).cast("string").alias("_doc"))
               .distinct()
@@ -78,24 +71,19 @@ def build_nodes_from_canon(m: DataFrame, id_col: str = "doc_id",
                     "surface_forms", "n_mentions", "n_docs"))
 
 
-def build_edges(mentions: DataFrame, canon: DataFrame,
-                id_col: str = "doc_id") -> DataFrame:
-    """Canonicalized co-mention edges: (canon entity) -[has_contact]->
-    (canon contact) weighted by distinct supporting documents."""
-    return build_edges_from_canon(mentions.join(canon, "pseudo_key"),
-                                  id_col=id_col)
-
-
 def build_edges_from_canon(m: DataFrame,
                            id_col: str = "doc_id") -> DataFrame:
-    """build_edges over PRE-canonicalized mentions: the per-doc
-    co-mention join runs directly on canon ids (no pseudo_key->canon
-    lookup joins at all).  Head-entity skew: countDistinct(prov_doc)
-    grouped by (src,pred,dst) would funnel a head entity's 10^11
-    provenance rows into one reducer.  Instead: distinct over the WIDER
-    uniform key (the doc ref spreads the shuffle evenly), then a count
-    whose partial aggregation is map-side combinable -- the hot key's
-    final reducer only merges per-partition counts."""
+    """Canonicalized co-mention edges over PRE-canonicalized mentions:
+    (canon entity) -[has_contact]-> (canon contact) weighted by distinct
+    supporting documents.  The per-doc co-mention join runs directly on
+    canon ids (no pseudo_key->canon lookup joins at all).
+
+    Head-entity skew: countDistinct(prov_doc) grouped by (src,pred,dst)
+    would funnel a head entity's 10^11 provenance rows into one
+    reducer.  Instead: distinct over the WIDER uniform key (the doc ref
+    spreads the shuffle evenly), then a count whose partial aggregation
+    is map-side combinable -- the hot key's final reducer only merges
+    per-partition counts."""
     from redactify_spark.operators.triples import contact_pairs
     return (contact_pairs(m, id_col, "canon_id")
             .select(F.col("subj").alias("src"),
@@ -105,20 +93,3 @@ def build_edges_from_canon(m: DataFrame,
             .distinct()
             .groupBy("src", "pred", "dst")
             .agg(F.count("*").alias("weight")))
-
-
-def materialize_graph(mentions: DataFrame, id_col: str = "doc_id",
-                      link_threshold: float = 0.6):
-    """Full downstream pipeline: linking -> components -> nodes/edges.
-
-    Returns (nodes_df, edges_df, canon_df)."""
-    from redactify_spark.operators.components import canonical_map
-    from redactify_spark.operators.linking import match_edges
-    # mentions feeds linking, canonical_map, nodes AND edges: persist so
-    # the upstream detection UDTF is evaluated exactly once
-    mentions = mentions.persist()
-    medges = match_edges(mentions, threshold=link_threshold)
-    canon = canonical_map(mentions, medges).localCheckpoint()
-    return (build_nodes(mentions, canon, id_col),
-            build_edges(mentions, canon, id_col),
-            canon)

@@ -49,7 +49,7 @@ def cooccurrence_edges(df: DataFrame, group_col: str, item_col: str,
                        max_group: int = MAX_COOC_GROUP) -> DataFrame:
     """Canonical undirected co-occurrence edges: distinct (src < dst)
     item pairs sharing at least one group (the native analogue of the
-    KG's co_mentioned edges, graph.py:build_edges)."""
+    KG's co_mentioned edges, graph.py:build_edges_from_canon)."""
     pairs = df.select(F.col(group_col).alias("_g"),
                       F.col(item_col).alias("_i")).distinct()
     sized = pairs.withColumn(

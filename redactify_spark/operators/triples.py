@@ -70,9 +70,9 @@ def contact_triples(mentions: DataFrame, id_col: str = "doc_id") -> DataFrame:
     EMAIL/PHONE mention in the same document."""
     # dedup PER DOCUMENT (multiple same-pair co-mentions inside one doc
     # collapse), but KEEP one row per supporting document -- provenance
-    # carries the edge weight downstream (build_edges counts distinct
-    # docs; a global (subj,pred,obj) dedup here would flatten every
-    # weight to 1)
+    # carries the edge weight downstream (build_edges_from_canon counts
+    # distinct docs; a global (subj,pred,obj) dedup here would flatten
+    # every weight to 1)
     return (contact_pairs(mentions, id_col, "pseudo_key",
                           with_surfaces=True)
             .select("subj", F.lit("has_contact").alias("pred"), "obj",

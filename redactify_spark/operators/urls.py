@@ -178,8 +178,8 @@ def crawl_delta(old: DataFrame, new: DataFrame, url_col: str = "url",
     Scale shape: two signature scans (shuffle-free) + ONE full-outer
     sort-merge join on url over 40-byte signature rows.  Page text
     never crosses the shuffle.  Downstream: feed
-    ``status IN ('added','touched','modified')`` urls to
-    plans/incremental.append_tranche and tombstone ``removed``."""
+    ``status IN ('added','touched','modified')`` urls to detection and
+    tombstone ``removed`` (plans/recrawl.append_snapshot)."""
     return delta_from_signatures(
         snapshot_signature(old, url_col, text_col),
         snapshot_signature(new, url_col, text_col),

@@ -178,6 +178,18 @@ def run_stage(spark: SparkSession, root: str, stage: str,
     return persisted
 
 
+def _union_stage_tables(spark: SparkSession, root: str,
+                        sub: str) -> DataFrame:
+    """Union all tranches' `sub` tables: the run_stage data dirs
+    <root>/tranches/<tranche>/<sub>/data."""
+    base = os.path.join(root, "tranches")
+    dirs = sorted(
+        os.path.join(base, t, sub, "data")
+        for t in os.listdir(base)
+        if os.path.isdir(os.path.join(base, t, sub, "data")))
+    return spark.read.parquet(*dirs)
+
+
 def read_manifest(root: str, stage: str) -> dict:
     with open(_manifest_path(root, stage)) as f:
         return json.load(f)
@@ -194,15 +206,11 @@ def invalidate(root: str, stage: str) -> None:
 
 def kg_pipeline(spark: SparkSession, pages: DataFrame, root: str,
                 id_col: str = "url") -> dict[str, DataFrame]:
-    """pages -> mentions -> triples -> link edges -> canon -> nodes/edges,
-    each stage checkpointed under `root`.  Kill the process after any
-    stage: rerunning resumes from the last complete stage (verified in
-    tests/test_checkpoint.py)."""
-    from redactify_spark.operators.components import canonical_map
+    """pages -> mentions -> triples, then `build_graph` over the
+    mentions, each stage checkpointed under `root`.  Kill the process
+    after any stage: rerunning resumes from the last complete stage
+    (verified in tests/test_checkpoint.py)."""
     from redactify_spark.operators.detection import detect_mentions
-    from redactify_spark.operators.graph import (build_edges_from_canon,
-                                                 build_nodes_from_canon)
-    from redactify_spark.operators.linking import match_edges
     from redactify_spark.operators.triples import all_triples
 
     mentions = run_stage(spark, root, "01_mentions",
@@ -210,6 +218,21 @@ def kg_pipeline(spark: SparkSession, pages: DataFrame, root: str,
                                                  text_col="text"))
     triples = run_stage(spark, root, "02_triples",
                         lambda: all_triples(mentions, id_col=id_col))
+    return {"mentions": mentions, "triples": triples,
+            **build_graph(spark, root, mentions, id_col)}
+
+
+def build_graph(spark: SparkSession, root: str, mentions: DataFrame,
+                id_col: str = "url") -> dict[str, DataFrame]:
+    """mentions -> link edges -> canon -> canonical mentions ->
+    nodes/edges -> salience, each stage checkpointed under `root`.  The
+    one graph-build path: kg_pipeline and the recrawl refresh both run
+    it, so every KG is built by the same stages."""
+    from redactify_spark.operators.components import canonical_map
+    from redactify_spark.operators.graph import (build_edges_from_canon,
+                                                 build_nodes_from_canon)
+    from redactify_spark.operators.linking import match_edges
+
     medges = run_stage(spark, root, "03_match_edges",
                        lambda: match_edges(mentions))
     canon = run_stage(spark, root, "04_canonical",
@@ -227,8 +250,7 @@ def kg_pipeline(spark: SparkSession, pages: DataFrame, root: str,
                                                      id_col=id_col))
     salience = run_stage(spark, root, "07_salience",
                          lambda: _entity_salience(nodes, edges))
-    return {"mentions": mentions, "triples": triples,
-            "match_edges": medges, "canonical": canon,
+    return {"match_edges": medges, "canonical": canon,
             "nodes": nodes, "edges": edges, "salience": salience}
 
 

@@ -10,7 +10,7 @@ persisted), so indexing a tranche touches only that tranche's rows and
 the accumulated index is byte-identical to a one-shot rebuild over the
 union (pytest-gated).
 
-This mirrors the incremental KG (plans/incremental.py) and incremental
+This mirrors the incremental KG (plans/recrawl.py) and incremental
 corpus dedup (plans/incremental_corpus.py): per-tranche expensive work,
 run_stage manifests/resume per tranche, bounded recompute.
 
@@ -38,8 +38,7 @@ from redactify_spark.operators.similarity import (_hyperplanes,
                                                   cell_assign_expr,
                                                   ivf_centroids,
                                                   signature_expr)
-from redactify_spark.plans.checkpoint import run_stage
-from redactify_spark.plans.incremental import _union_stage_tables
+from redactify_spark.plans.checkpoint import _union_stage_tables, run_stage
 
 
 def _centroids_path(root: str) -> str:

@@ -7,7 +7,7 @@ tranche can only add pairs that touch a new document, so candidates =
 new-bands x all-bands -- old-old pairs were found when their tranche
 arrived); and the kept-set is recomputed per refresh as connected
 components over the accumulated edges, exactly like the incremental KG
-recomputes its graph stages (plans/incremental.py): CC input is
+recomputes its graph stages (plans/recrawl.py): CC input is
 edges << documents, so the recompute is bounded by the duplicate
 population, not crawl size.
 
@@ -44,8 +44,7 @@ from pyspark.sql.window import Window
 
 from redactify_spark.operators.dedup import (MAX_BUCKET, doc_minhash_bands,
                                              verify_jaccard)
-from redactify_spark.plans.checkpoint import run_stage
-from redactify_spark.plans.incremental import _union_stage_tables
+from redactify_spark.plans.checkpoint import _union_stage_tables, run_stage
 
 
 def dedup_tranche(spark: SparkSession, root: str, tranche_id: str,

@@ -1,7 +1,9 @@
 """Recrawl-aware incremental KG maintenance: detection cost follows the
 CHANGED pages, not the crawl size.
 
-plans/incremental.py appends disjoint url tranches (append-only model).
+Pages are keyed by their `url` column: the signature, delta and
+ownership tables are all url-keyed.  A crawl of disjoint url tranches
+is the special case `append_snapshot(..., full_snapshot=False)`.
 Real crawls RE-VISIT urls: most pages are byte-identical between
 monthly snapshots, a long tail is touched (boilerplate churn) or
 modified, some disappear, some are new.  At 10^12 pages, re-running
@@ -21,9 +23,9 @@ across full-crawl snapshots with:
   current, + liveness) so the live mention set is a join away, and
   `removed` pages tombstone out of the graph without rewriting any
   tranche's mentions;
-- invalidate-and-rebuild graph refresh over the live mentions, exactly
-  plans/incremental.refresh_graph's policy (linking cost is bounded by
-  DISTINCT entities, not crawl size).
+- invalidate-and-rebuild graph refresh over the live mentions through
+  plans/checkpoint.build_graph, the same stages kg_pipeline runs
+  (linking cost is bounded by DISTINCT entities, not crawl size).
 
 Everything is run_stage-managed (manifests, per-partition lineage,
 kill-resume), and appending snapshot T2 after T1 is pytest-gated
@@ -39,11 +41,12 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from redactify_spark.plans.checkpoint import run_stage
+from redactify_spark.plans.checkpoint import build_graph, run_stage
 
 #: statuses that always re-enter detection
 _ALWAYS_DETECT = ("added", "modified")
@@ -79,8 +82,7 @@ def _ownership(spark: SparkSession, root: str,
 
 
 def append_snapshot(spark: SparkSession, root: str, tranche_id: str,
-                    pages: DataFrame, id_col: str = "url",
-                    text_col: str = "text",
+                    pages: DataFrame, text_col: str = "text",
                     redetect_touched: bool = True,
                     full_snapshot: bool = True,
                     near_hamming: int = 3) -> dict:
@@ -105,7 +107,7 @@ def append_snapshot(spark: SparkSession, root: str, tranche_id: str,
 
     sig_new = run_stage(
         spark, troot, "signatures",
-        lambda: snapshot_signature(pages, id_col, text_col))
+        lambda: snapshot_signature(pages, "url", text_col))
 
     if prev is not None:
         own_prev = _ownership(spark, root, prev)
@@ -123,17 +125,17 @@ def append_snapshot(spark: SparkSession, root: str, tranche_id: str,
         ["touched"] if redetect_touched else [])
     to_detect = (pages.join(
         delta.where(F.col("status").isin(detect_statuses))
-        .select(F.col("url").alias(id_col)).distinct(),
-        id_col, "semi"))
+        .select("url").distinct(),
+        "url", "semi"))
 
     mentions = run_stage(
         spark, troot, "mentions",
-        lambda: detect_mentions(to_detect, id_col=id_col,
+        lambda: detect_mentions(to_detect, id_col="url",
                                 text_col=text_col)
         .withColumn("_tranche", F.lit(tranche_id)))
     run_stage(
         spark, troot, "triples",
-        lambda: all_triples(mentions.drop("_tranche"), id_col=id_col)
+        lambda: all_triples(mentions.drop("_tranche"), id_col="url")
         .withColumn("_tranche", F.lit(tranche_id)))
 
     # --- ownership update -------------------------------------------------
@@ -212,32 +214,16 @@ def current_triples(spark: SparkSession, root: str) -> DataFrame:
     return _live_rows(spark, root, "triples")
 
 
-def refresh_graph(spark: SparkSession, root: str,
-                  id_col: str = "url") -> dict[str, DataFrame]:
-    """Rebuild linking -> canonical map -> nodes/edges over the LIVE
-    mentions (plans/incremental.refresh_graph's invalidate-and-rebuild
-    policy; cost bounded by distinct entities, not crawl size)."""
-    from redactify_spark.operators.components import canonical_map
-    from redactify_spark.operators.graph import build_edges, build_nodes
-    from redactify_spark.operators.linking import match_edges
-    from redactify_spark.plans.checkpoint import invalidate
-
-    mentions = current_mentions(spark, root)
+def refresh_graph(spark: SparkSession, root: str) -> dict[str, DataFrame]:
+    """Rebuild the graph (plans/checkpoint.build_graph) over the LIVE
+    mentions under <root>/graph.  Invalidate-and-rebuild: the previous
+    refresh's graph stages are dropped first (cost bounded by distinct
+    entities, not crawl size)."""
     groot = os.path.join(root, "graph")
-    for stage in ("03_match_edges", "04_canonical", "05_nodes",
-                  "06_edges"):
-        invalidate(groot, stage)
-    medges = run_stage(spark, groot, "03_match_edges",
-                       lambda: match_edges(mentions))
-    canon = run_stage(spark, groot, "04_canonical",
-                      lambda: canonical_map(mentions, medges))
-    nodes = run_stage(spark, groot, "05_nodes",
-                      lambda: build_nodes(mentions, canon, id_col=id_col))
-    edges = run_stage(spark, groot, "06_edges",
-                      lambda: build_edges(mentions, canon, id_col=id_col))
+    shutil.rmtree(groot, ignore_errors=True)
+    mentions = current_mentions(spark, root)
     return {"mentions": mentions, "triples": current_triples(spark, root),
-            "match_edges": medges, "canonical": canon,
-            "nodes": nodes, "edges": edges}
+            **build_graph(spark, groot, mentions)}
 
 
 def compact_ledger(spark: SparkSession, root: str,
@@ -257,8 +243,6 @@ def compact_ledger(spark: SparkSession, root: str,
     a wrong live set.
 
     Returns the compacted tranche id."""
-    import shutil
-
     seq = read_ledger(root)
     if not seq:
         raise ValueError(f"nothing to compact under {root}")

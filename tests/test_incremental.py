@@ -1,11 +1,11 @@
-"""Incremental KG maintenance: tranche appends + graph refresh must
-equal one-shot processing of the union, and old tranches must not be
-re-detected."""
+"""Incremental KG maintenance: tranche appends (partial snapshots) +
+graph refresh must equal one-shot processing of the union, and old
+tranches must not be re-detected."""
 
 import pytest
 
 from redactify_spark.plans import checkpoint as CP
-from redactify_spark.plans import incremental as INC
+from redactify_spark.plans import recrawl as R
 from redactify_spark.sources.pages import synth_pages
 
 
@@ -22,17 +22,17 @@ def test_incremental_equals_oneshot(spark, tmp_path):
 
     # incremental: tranche 1, refresh, tranche 2, refresh
     inc_root = str(tmp_path / "inc")
-    INC.append_tranche(spark, inc_root, "t1", t1)
-    mid = INC.refresh_graph(spark, inc_root)
+    R.append_snapshot(spark, inc_root, "t1", t1, full_snapshot=False)
+    mid = R.refresh_graph(spark, inc_root)
     mid_nodes = table_set(mid["nodes"])
-    INC.append_tranche(spark, inc_root, "t2", t2)
-    final = INC.refresh_graph(spark, inc_root)
+    R.append_snapshot(spark, inc_root, "t2", t2, full_snapshot=False)
+    final = R.refresh_graph(spark, inc_root)
 
     # one-shot over the union
     one_root = str(tmp_path / "oneshot")
     one = CP.kg_pipeline(spark, all_pages, one_root, id_col="url")
 
-    for k in ("nodes", "edges", "triples"):
+    for k in ("nodes", "edges", "triples", "salience"):
         assert table_set(final[k]) == table_set(one[k]), k
     # the mid-state graph differs (fewer pages) -- refresh really rebuilt
     assert mid_nodes != table_set(final["nodes"])
@@ -41,11 +41,11 @@ def test_incremental_equals_oneshot(spark, tmp_path):
 def test_append_tranche_skips_completed(spark, tmp_path):
     root = str(tmp_path / "inc2")
     pages = synth_pages(spark, 8, partitions=2).localCheckpoint()
-    INC.append_tranche(spark, root, "t1", pages)
+    R.append_snapshot(spark, root, "t1", pages, full_snapshot=False)
     m1 = CP.read_manifest(f"{root}/tranches/t1", "mentions")
     # re-appending the same tranche id resumes from the manifest
     # (no recompute -- wall_time unchanged)
-    INC.append_tranche(spark, root, "t1", pages)
+    R.append_snapshot(spark, root, "t1", pages, full_snapshot=False)
     m2 = CP.read_manifest(f"{root}/tranches/t1", "mentions")
     assert m1 == m2
 

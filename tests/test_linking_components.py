@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 from redactify_spark.operators import linking as L
 from redactify_spark.operators.components import (canonical_map,
                                                   connected_components)
-from redactify_spark.operators.graph import materialize_graph
+from redactify_spark.plans.checkpoint import build_graph
 
 
 # --- pure helpers ---------------------------------------------------------
@@ -155,12 +155,13 @@ def test_canonical_map_singletons(spark):
 
 # --- end-to-end graph over synthetic pages --------------------------------
 
-def test_materialize_graph(spark):
+def test_build_graph(spark, tmp_path):
     from redactify_spark.operators.detection import detect_mentions
     from redactify_spark.sources.pages import synth_pages
     pages = synth_pages(spark, 64, partitions=4)
     mentions = detect_mentions(pages, id_col="url", text_col="text").cache()
-    nodes, edges, canon = materialize_graph(mentions, id_col="url")
+    g = build_graph(spark, str(tmp_path), mentions)
+    nodes, edges = g["nodes"], g["edges"]
     n = nodes.collect()
     assert n, "expected nodes"
     assert {r.type for r in n} >= {"PERSON", "ORGANIZATION", "EMAIL_ADDRESS"}
@@ -176,7 +177,8 @@ def test_build_nodes_head_entity_two_phase(spark):
     bounded surface_forms array (never an unbounded collect_set).  1000
     mentions over 100 distinct docs and 40 distinct surfaces must yield
     n_docs=100 (not 1, not 1000) and exactly TOP_K_SURFACES surfaces."""
-    from redactify_spark.operators.graph import TOP_K_SURFACES, build_nodes
+    from redactify_spark.operators.graph import (TOP_K_SURFACES,
+                                                 build_nodes_from_canon)
     rows = [("[ORGANIZATION-h]", "ORGANIZATION", f"Surf{i % 40:02d}", i % 100)
             for i in range(1000)]
     rows.append(("[PERSON-p]", "PERSON", "John Smith", 3))
@@ -187,7 +189,8 @@ def test_build_nodes_head_entity_two_phase(spark):
         [("[ORGANIZATION-h]", "[ORGANIZATION-h]"),
          ("[PERSON-p]", "[PERSON-p]")],
         "pseudo_key string, canon_id string")
-    got = {r.canon_id: r for r in build_nodes(mentions, canon).collect()}
+    got = {r.canon_id: r for r in build_nodes_from_canon(
+        mentions.join(canon, "pseudo_key")).collect()}
     head = got["[ORGANIZATION-h]"]
     assert head.n_docs == 100
     assert head.n_mentions == 1000
@@ -222,16 +225,15 @@ def test_cc_reliable_checkpoint(spark, tmp_path):
         ["a", "b", "c"], ["x", "y"]]
 
 
-def test_edge_weight_counts_supporting_docs(spark):
+def test_edge_weight_counts_supporting_docs(spark, tmp_path):
     """Regression: a contact edge supported by many documents must carry
     that count as weight (a global triple dedup had flattened all
     weights to 1)."""
     from redactify_spark.operators.detection import detect_mentions
-    from redactify_spark.operators.graph import materialize_graph
     from redactify_spark.sources.pages import synth_pages, HEAD_ENTITY_FRACTION
     pages = synth_pages(spark, 64, partitions=4)
     m = detect_mentions(pages, id_col="url", text_col="text").persist()
-    nodes, edges, canon = materialize_graph(m, id_col="url")
+    edges = build_graph(spark, str(tmp_path), m)["edges"]
     top = edges.orderBy(edges.weight.desc()).first()
     # the head pair (google org <-> press@google.com) co-occurs on every
     # HEAD_ENTITY_FRACTION-th page

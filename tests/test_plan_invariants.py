@@ -108,25 +108,6 @@ def test_q61_stratified_sample_filter_only(spark, qs):
     assert "Filter" in plan
 
 
-def test_pagerank_round_aggregates_map_side(spark, qs):
-    """A PageRank round's contribution aggregation must be partial
-    (map-side combinable) so head entities merge per-partition counts,
-    not raw contribution rows.  The q57 plan itself is truncated by the
-    per-round lineage cuts, so assert on one round built inline."""
-    from pyspark.sql import functions as F
-    e = spark.createDataFrame([(1, 2, 0.5), (2, 1, 1.0)],
-                              "src long, dst long, _w double")
-    ranks = spark.createDataFrame([(1, 1.0), (2, 1.0)],
-                                  "node long, rank double")
-    one_round = (e.join(ranks, e["src"] == ranks["node"])
-                 .select(F.col("dst").alias("node"),
-                         (F.col("rank") * F.col("_w")).alias("_c"))
-                 .groupBy("node").agg(F.sum("_c").alias("_in")))
-    plan = plan_of(one_round)
-    # partial + final HashAggregate around the exchange
-    assert plan.count("HashAggregate") >= 2
-
-
 def test_q64_unigram_join_is_vocabulary_sized(spark, qs):
     """The NLL scorer joins the exploded tokens against the LM table --
     no cartesian anything, and the per-doc aggregation is hash-based."""

@@ -81,7 +81,8 @@ def test_live_mentions_equal_oneshot(applied, spark):
 def test_live_triples_and_graph_equal_oneshot(applied, spark):
     from redactify_spark.operators.components import canonical_map
     from redactify_spark.operators.detection import detect_mentions
-    from redactify_spark.operators.graph import build_edges, build_nodes
+    from redactify_spark.operators.graph import (build_edges_from_canon,
+                                                 build_nodes_from_canon)
     from redactify_spark.operators.linking import match_edges
     from redactify_spark.operators.triples import all_triples
     root, _, _ = applied
@@ -89,11 +90,11 @@ def test_live_triples_and_graph_equal_oneshot(applied, spark):
     m = detect_mentions(_snap2(spark), id_col="url", text_col="text")
     assert _collect(got["triples"]) == _collect(all_triples(m, "url"))
     me = match_edges(m)
-    canon = canonical_map(m, me)
+    cm = m.join(canonical_map(m, me), "pseudo_key")
     assert _collect(got["nodes"]) == _collect(
-        build_nodes(m, canon, id_col="url"))
+        build_nodes_from_canon(cm, id_col="url"))
     assert _collect(got["edges"]) == _collect(
-        build_edges(m, canon, id_col="url"))
+        build_edges_from_canon(cm, id_col="url"))
 
 
 def test_append_is_idempotent(applied, spark):
@@ -103,6 +104,19 @@ def test_append_is_idempotent(applied, spark):
     assert again["delta"] == s2["delta"]
     assert _collect(R.current_mentions(spark, root)) == before
     assert R.read_ledger(root) == ["t1", "t2"]
+
+
+def test_snapshot_without_url_column_fails_first_stage(spark, tmp_path):
+    """Pages are keyed by `url`: a snapshot keyed by anything else is
+    rejected by the signatures stage, before any stage table exists."""
+    from pyspark.errors import AnalysisException
+
+    root = tmp_path / "no_url"
+    pages = _pages(spark, range(3)).withColumnRenamed("url", "page_id")
+    with pytest.raises(AnalysisException):
+        R.append_snapshot(spark, str(root), "t1", pages)
+    assert not root.exists() or not any(root.iterdir())
+    assert R.read_ledger(str(root)) == []
 
 
 def test_budget_mode_skips_touched(spark, tmp_path):
