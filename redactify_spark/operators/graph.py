@@ -27,11 +27,10 @@ def build_nodes_from_canon(m: DataFrame, id_col: str = "doc_id",
                            ) -> DataFrame:
     """nodes(canon_id, type, surface_forms, n_mentions, n_docs) over
     PRE-canonicalized mentions (canon_id already joined on).
-    plans/checkpoint.build_graph materializes mentions x canon ONCE
-    (stage 04b) and feeds both this and build_edges_from_canon -- the
-    mentions-sized pseudo_key shuffle join is paid once instead of
-    three times (measured: 05_nodes+06_edges were the worst-scaling
-    stages at 10^6 docs before the shared stage).
+    plans/checkpoint.build_graph passes the unstored join of the
+    mentions and canonical-map stages to both this and
+    build_edges_from_canon; while one side fits the broadcast
+    threshold, the join adds no shuffle.
 
     Scale shape (the build_edges_from_canon two-phase pattern, applied
     to n_docs):

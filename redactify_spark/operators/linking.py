@@ -182,28 +182,23 @@ def score_pairs(pairs: DataFrame) -> DataFrame:
 LINKABLE_TYPES = ("PERSON", "ORGANIZATION", "LOCATION")
 
 
-def match_edges(mentions: DataFrame, threshold: float = 0.55,
-                same_type_only: bool = True,
-                link_types: tuple[str, ...] | None = LINKABLE_TYPES
-                ) -> DataFrame:
+def match_edges(mentions: DataFrame, threshold: float = 0.55) -> DataFrame:
     """Full linking stage: mentions -> match edges (key_a, key_b, jaccard).
 
-    Keys encode the entity type ('[PERSON-x]'), so same_type_only is
-    enforced by construction of pseudo_key prefixes when requested.
-    Only name-like types fuzzy-link by default (link_types): identifier
-    types (emails, phones, SSNs) are identity-keyed -- two different
+    Only keys of the same entity type link: keys encode the type
+    ('[PERSON-x]'), so pairs are filtered on the pseudo_key prefix.
+    Only name-like types (LINKABLE_TYPES) fuzzy-link: identifier types
+    (emails, phones, SSNs) are identity-keyed -- two different
     addresses are different entities no matter how string-similar.
+    Key-only inputs (no entity_group column) link every key.
     """
     ents = mentions
-    if link_types is not None and "entity_group" in mentions.columns:
-        ents = ents.where(F.col("entity_group").isin(*link_types))
+    if "entity_group" in mentions.columns:
+        ents = ents.where(F.col("entity_group").isin(*LINKABLE_TYPES))
     ents = ents.select("pseudo_key", "surface").dropDuplicates(["pseudo_key"])
-    bands = surface_bands(ents)
-    pairs = candidate_pairs(bands)
-    if same_type_only:
-        pairs = pairs.where(
-            F.split(F.col("key_a"), "-").getItem(0)
-            == F.split(F.col("key_b"), "-").getItem(0))
+    pairs = candidate_pairs(surface_bands(ents)).where(
+        F.split(F.col("key_a"), "-").getItem(0)
+        == F.split(F.col("key_b"), "-").getItem(0))
     return score_pairs(pairs).where(F.col("jaccard") >= threshold)
 
 

@@ -29,7 +29,7 @@ import shutil
 import time
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -41,13 +41,24 @@ def _data_path(root: str, stage: str) -> str:
     return os.path.join(root, stage, "data")
 
 
+def _hash_sum(df: DataFrame) -> Column:
+    """Aggregate: sum of per-row xxhash64 over name-sorted string casts,
+    as a decimal so the sum cannot overflow.  `_fold` of it is the
+    content hash; the manifest, the audit and content_hash all use
+    this one definition."""
+    cols = [F.col(c).cast("string") for c in sorted(df.columns)]
+    return F.sum(F.xxhash64(*cols).cast("decimal(38,0)"))
+
+
+def _fold(total) -> int:
+    """A `_hash_sum` value (None for no rows) -> the content hash."""
+    return int(total or 0) % (1 << 61)
+
+
 def content_hash(df: DataFrame) -> int:
     """Order- and partitioning-insensitive content hash: sum of row
     hashes over name-sorted columns (distributed aggregation)."""
-    cols = [F.col(c).cast("string") for c in sorted(df.columns)]
-    row = df.select(F.xxhash64(*cols).cast("decimal(38,0)").alias("h"))
-    out = row.agg(F.sum(F.col("h")).alias("s")).collect()[0].s
-    return int(out or 0) % (1 << 61)
+    return _fold(df.agg(_hash_sum(df)).collect()[0][0])
 
 
 def _rel_file_key(uri: str, base: str) -> str:
@@ -73,14 +84,11 @@ def stage_manifest_stats(spark: SparkSession, path: str) -> dict:
     existing stage table); run_stage itself computes the same stats FOR
     FREE during the write via df.observe -- zero extra scan."""
     df = spark.read.parquet(path)
-    cols = [F.col(c).cast("string") for c in sorted(df.columns)]
-    rows = (df.select(F.input_file_name().alias("file"),
-                      F.xxhash64(*cols).cast("decimal(38,0)").alias("h"))
-            .groupBy("file")
-            .agg(F.count("*").alias("n"), F.sum("h").alias("s"))
+    rows = (df.groupBy(F.input_file_name().alias("file"))
+            .agg(F.count("*").alias("n"), _hash_sum(df).alias("s"))
             .collect())
     total = sum(r.n for r in rows)
-    h = int(sum(int(r.s) for r in rows if r.s is not None)) % (1 << 61)
+    h = _fold(sum(r.s for r in rows))
     return {"row_count": total, "content_hash": h,
             "partitions": {_rel_file_key(r.file, path): r.n
                            for r in rows}}
@@ -105,14 +113,6 @@ def _parquet_footer_counts(path: str) -> dict[str, int]:
     return out
 
 
-def partition_counts(spark: SparkSession, path: str) -> dict[str, int]:
-    """Row count per parquet file (the per-partition lineage record)."""
-    df = spark.read.parquet(path)
-    rows = (df.groupBy(F.input_file_name().alias("file"))
-            .count().collect())
-    return {_rel_file_key(r.file, path): r["count"] for r in rows}
-
-
 def stage_complete(root: str, stage: str) -> bool:
     p = _manifest_path(root, stage)
     if not os.path.exists(p):
@@ -126,8 +126,7 @@ def stage_complete(root: str, stage: str) -> bool:
 
 
 def run_stage(spark: SparkSession, root: str, stage: str,
-              builder: Callable[[], DataFrame],
-              partitions: int | None = None) -> DataFrame:
+              builder: Callable[[], DataFrame]) -> DataFrame:
     """Execute-or-resume one pipeline stage.
 
     Returns the stage's DataFrame (read back from the checkpoint table,
@@ -139,19 +138,15 @@ def run_stage(spark: SparkSession, root: str, stage: str,
 
     t0 = time.time()
     df = builder()
-    if partitions:
-        df = df.repartition(partitions)
     # manifest stats ride the write action itself (df.observe computes
     # the aggregates as rows stream to parquet): one action per stage
     # instead of write + stats rescan -- this halved the DAG's fixed
     # per-stage overhead (VERDICT r2 next-round #7)
     from pyspark.sql import Observation
     obs = Observation()
-    cols = [F.col(c).cast("string") for c in sorted(df.columns)]
     df = df.observe(obs,
                     F.count(F.lit(1)).alias("n"),
-                    F.sum(F.xxhash64(*cols).cast("decimal(38,0)"))
-                    .alias("s"))
+                    _hash_sum(df).alias("s"))
     tmp = data + "_tmp"
     shutil.rmtree(tmp, ignore_errors=True)
     df.write.mode("overwrite").parquet(tmp)
@@ -166,7 +161,7 @@ def run_stage(spark: SparkSession, root: str, stage: str,
         "schema": persisted.schema.simpleString(),
         "wall_time_sec": round(time.time() - t0, 3),
         "row_count": int(m["n"]),
-        "content_hash": int(m["s"] or 0) % (1 << 61),
+        "content_hash": _fold(m["s"]),
         # per-partition lineage from parquet footers: metadata-only,
         # no data rescan (Iceberg-manifest analogue)
         "partitions": _parquet_footer_counts(data),
@@ -224,10 +219,10 @@ def kg_pipeline(spark: SparkSession, pages: DataFrame, root: str,
 
 def build_graph(spark: SparkSession, root: str, mentions: DataFrame,
                 id_col: str = "url") -> dict[str, DataFrame]:
-    """mentions -> link edges -> canon -> canonical mentions ->
-    nodes/edges -> salience, each stage checkpointed under `root`.  The
-    one graph-build path: kg_pipeline and the recrawl refresh both run
-    it, so every KG is built by the same stages."""
+    """mentions -> link edges -> canon -> nodes/edges -> salience, each
+    stage checkpointed under `root`.  The one graph-build path:
+    kg_pipeline and the recrawl refresh both run it, so every KG is
+    built by the same stages."""
     from redactify_spark.operators.components import canonical_map
     from redactify_spark.operators.graph import (build_edges_from_canon,
                                                  build_nodes_from_canon)
@@ -237,11 +232,10 @@ def build_graph(spark: SparkSession, root: str, mentions: DataFrame,
                        lambda: match_edges(mentions))
     canon = run_stage(spark, root, "04_canonical",
                       lambda: canonical_map(mentions, medges))
-    # canonicalized mentions materialized ONCE: nodes and edges both
-    # consume it, so the mentions-sized pseudo_key shuffle join is paid
-    # here instead of inside each downstream stage (3x at 10^6 docs)
-    cmention = run_stage(spark, root, "04b_canon_mentions",
-                         lambda: mentions.join(canon, "pseudo_key"))
+    # canonicalized mentions are joined on read, not stored: both sides
+    # are stored stages, and while one fits the broadcast threshold the
+    # planner joins them inside 05 and 06 with no shuffle
+    cmention = mentions.join(canon, "pseudo_key")
     nodes = run_stage(spark, root, "05_nodes",
                       lambda: build_nodes_from_canon(cmention,
                                                      id_col=id_col))
