@@ -3219,17 +3219,18 @@ def oracle_sql() -> dict[str, str]:
         {_sig_cte("old")},
         {_sig_cte("new")},
         j AS (SELECT coalesce(o.url, n.url) AS url,
+                     o.url AS u_old, n.url AS u_new,
                      o.digest AS d_old, n.digest AS d_new,
                      o.simhash AS sh_old, n.simhash AS sh_new
               FROM old_sig o FULL OUTER JOIN new_sig n ON o.url = n.url)
         SELECT CAST(url AS BIGINT) AS doc_id,
-               CASE WHEN d_old IS NULL THEN 'added'
-                    WHEN d_new IS NULL THEN 'removed'
+               CASE WHEN u_old IS NULL THEN 'added'
+                    WHEN u_new IS NULL THEN 'removed'
                     WHEN d_old = d_new THEN 'unchanged'
                     WHEN bit_count(xor(sh_old, sh_new)) <= 3
                         THEN 'touched'
                     ELSE 'modified' END AS status,
-               CASE WHEN d_old IS NULL OR d_new IS NULL THEN NULL
+               CASE WHEN u_old IS NULL OR u_new IS NULL THEN NULL
                     ELSE CAST(bit_count(xor(sh_old, sh_new)) AS BIGINT)
                     END AS hamming
         FROM j ORDER BY doc_id

@@ -743,7 +743,7 @@ def main():
         # cost of detecting T2's full live snapshot.  The claim under
         # test: detection cost follows the CHANGED pages (the 10^12
         # argument for plans/recrawl), with the ledger overhead
-        # (signatures + delta + ownership) visible, not hidden.
+        # (the ownership state table) visible, not hidden.
         from pyspark.sql import functions as F
         from redactify_spark.plans import recrawl as R
         from redactify_spark.plans.session import build_session

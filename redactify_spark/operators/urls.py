@@ -87,12 +87,13 @@ def dedup_pages_by_url(pages: DataFrame, url_col: str = "url",
 # crawl-delta classification (recrawl snapshot diff)
 # ---------------------------------------------------------------------------
 
-def _simhash_fold_udf(n_bits: int):
+def _simhash_fold_udf():
     """Arrow-batched majority fold: array<long> token hashes -> int64
-    SimHash.  BIT-IDENTICAL to the native per-bit aggregate folds (same
-    md5-derived hashes, same integer majority rule; parity-pinned in
-    pytest) but one numpy pass instead of n_bits interpreted HOF
-    traversals -- measured 7.3 s -> 1.7 s on 200k pages."""
+    SimHash.  BIT-IDENTICAL to dedup.doc_simhash_native's per-bit
+    aggregate folds (same md5-derived hashes, same integer majority
+    rule; parity-pinned in pytest) but one numpy pass instead of 60
+    interpreted HOF traversals -- measured 7.3 s -> 1.7 s on 200k
+    pages."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -102,7 +103,7 @@ def _simhash_fold_udf(n_bits: int):
     # that; hint-less defaults to the scalar series->series eval type
     @pandas_udf("long")
     def sig(hs):
-        shifts = np.arange(n_bits, dtype=np.uint64)
+        shifts = np.arange(_SIMHASH_BITS, dtype=np.uint64)
         out = np.zeros(len(hs), dtype=np.int64)
         for i, arr in enumerate(hs):
             if arr is None or len(arr) == 0:
@@ -117,9 +118,7 @@ def _simhash_fold_udf(n_bits: int):
 
 
 def snapshot_signature(df: DataFrame, url_col: str = "url",
-                       text_col: str = "text",
-                       n_bits: int = _SIMHASH_BITS,
-                       engine: str = "pandas") -> DataFrame:
+                       text_col: str = "text") -> DataFrame:
     """(url, digest, simhash) per page: md5 digest for exact-change
     detection plus the SimHash for magnitude-of-change.  One
     shuffle-free scan; the signature table is ~40 bytes per row, which
@@ -127,36 +126,17 @@ def snapshot_signature(df: DataFrame, url_col: str = "url",
     the text never moves).
 
     This pass runs over EVERY page of EVERY recrawl -- it is the O(N)
-    floor of the delta architecture -- so the majority fold defaults to
-    the Arrow-batched numpy kernel (engine="pandas", 4.3x faster,
-    bit-identical).  engine="native" keeps the zero-Python per-bit
-    aggregate folds; both produce the same values, so the q113 oracle
-    checks whichever engine runs.  Tokenization + md5 stay native
-    either way."""
+    floor of the delta architecture -- so tokenization + md5 stay
+    native and only the majority fold runs in the Arrow-batched numpy
+    kernel (4.3x faster than the per-bit native folds, bit-identical;
+    the q113 oracle recomputes the simhash independently)."""
     from redactify_spark.operators.dedup import _native_tokens
     hashes = F.transform(
         _native_tokens(F.col(text_col)),
         lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long"))
-    base = df.select(F.col(url_col).alias("url"),
+    return df.select(F.col(url_col).alias("url"),
                      F.md5(F.col(text_col)).alias("digest"),
-                     hashes.alias("_hs"))
-    if engine == "pandas":
-        # single consumer of _hs: no re-tokenization risk, no barrier
-        return base.select("url", "digest",
-                           _simhash_fold_udf(n_bits)("_hs")
-                           .alias("simhash"))
-    # native: barrier the token-hash pass so the n_bits folds don't
-    # re-tokenize (CollapseProject trap, dedup.doc_simhash_native)
-    base = base.localCheckpoint(eager=False)
-    sig = F.lit(0).cast("long")
-    for b in range(n_bits):
-        vote = F.aggregate(
-            F.col("_hs"), F.lit(0).cast("long"),
-            # eagerly evaluated per iteration, so closing over b is safe
-            lambda acc, h: acc + (F.shiftright(h, b)
-                                  .bitwiseAND(F.lit(1)) * 2 - 1))
-        sig = sig + F.when(vote > 0, F.lit(1 << b)).otherwise(F.lit(0))
-    return base.select("url", "digest", sig.alias("simhash"))
+                     _simhash_fold_udf()(hashes).alias("simhash"))
 
 
 def crawl_delta(old: DataFrame, new: DataFrame, url_col: str = "url",
@@ -189,21 +169,42 @@ def crawl_delta(old: DataFrame, new: DataFrame, url_col: str = "url",
 def delta_from_signatures(old_sig: DataFrame, new_sig: DataFrame,
                           near_hamming: int = 3) -> DataFrame:
     """crawl_delta over PRE-COMPUTED (url, digest, simhash) signature
-    tables -- the resume path: a recrawl ledger persists each crawl's
-    signatures (40 bytes/url), so the next delta never re-reads old
-    page text."""
-    o = old_sig.select("url", F.col("digest").alias("_d_old"),
-                       F.col("simhash").alias("_sh_old"))
-    n = new_sig.select("url", F.col("digest").alias("_d_new"),
-                       F.col("simhash").alias("_sh_new"))
-    j = o.join(n, "url", "full_outer")
-    hamming = F.bit_count(F.col("_sh_old").bitwiseXOR(F.col("_sh_new")))
-    status = (F.when(F.col("_d_old").isNull(), F.lit("added"))
-              .when(F.col("_d_new").isNull(), F.lit("removed"))
-              .when(F.col("_d_old") == F.col("_d_new"), F.lit("unchanged"))
+    tables, so the next delta never re-reads old page text."""
+    def side(sig: DataFrame) -> DataFrame:
+        return sig.select("url", F.lit(True).alias("present"), "digest",
+                          "simhash")
+    return (classify_signatures(side(old_sig), side(new_sig), near_hamming)
+            .select("url", "status", "hamming"))
+
+
+def classify_signatures(old: DataFrame, new: DataFrame,
+                        near_hamming: int = 3) -> DataFrame:
+    """The crawl-delta status of every url: ONE full-outer join on url of
+    two (url, present, digest, simhash, ...) tables.  Every column but
+    `url` comes out suffixed by its side (`digest_old`, `digest_new`),
+    plus `status` and `hamming` (crawl_delta has the classes).
+
+    A side holds a url when its `present` is true: the digest cannot
+    mark presence, since md5(NULL) is NULL, so a url with NULL text is
+    never `unchanged` and a both-NULL url is `touched` at hamming 0.  A
+    url present on neither side (a row with `present` false, e.g. a
+    tombstone, that the other side lacks) gets a NULL status."""
+    def suffixed(df: DataFrame, sfx: str) -> DataFrame:
+        return df.select("url", *[F.col(c).alias(f"{c}_{sfx}")
+                                  for c in df.columns if c != "url"])
+
+    in_old = F.coalesce(F.col("present_old"), F.lit(False))
+    in_new = F.coalesce(F.col("present_new"), F.lit(False))
+    hamming = F.bit_count(
+        F.col("simhash_old").bitwiseXOR(F.col("simhash_new")))
+    status = (F.when(~in_new, F.when(in_old, F.lit("removed")))
+              .when(~in_old, F.lit("added"))
+              .when(F.col("digest_old") == F.col("digest_new"),
+                    F.lit("unchanged"))
               .when(hamming <= near_hamming, F.lit("touched"))
               .otherwise(F.lit("modified")))
-    return j.select(
-        "url", status.alias("status"),
-        F.when(F.col("_d_old").isNotNull() & F.col("_d_new").isNotNull(),
-               hamming).cast("long").alias("hamming"))
+    return (suffixed(old, "old").join(suffixed(new, "new"), "url",
+                                       "full_outer")
+            .withColumn("status", status)
+            .withColumn("hamming",
+                        F.when(in_old & in_new, hamming).cast("long")))

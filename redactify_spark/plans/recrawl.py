@@ -1,31 +1,37 @@
 """Recrawl-aware incremental KG maintenance: detection cost follows the
 CHANGED pages, not the crawl size.
 
-Pages are keyed by their `url` column: the signature, delta and
-ownership tables are all url-keyed.  A crawl of disjoint url tranches
-is the special case `append_snapshot(..., full_snapshot=False)`.
-Real crawls RE-VISIT urls: most pages are byte-identical between
-monthly snapshots, a long tail is touched (boilerplate churn) or
-modified, some disappear, some are new.  At 10^12 pages, re-running
-mention detection over an unchanged page is the single largest
-avoidable cost in the whole system, so this module maintains the KG
-across full-crawl snapshots with:
+Pages are keyed by their `url` column; the ownership table is
+url-keyed.  A crawl of disjoint url tranches is the special case
+`append_snapshot(..., full_snapshot=False)`.  Real crawls RE-VISIT
+urls: most pages are byte-identical between monthly snapshots, a long
+tail is touched (boilerplate churn) or modified, some disappear, some
+are new.  At 10^12 pages, re-running mention detection over an
+unchanged page is the single largest avoidable cost in the whole
+system, so this module maintains the KG across full-crawl snapshots
+with ONE stored state table per snapshot, `state/<t>/ownership`:
+(url, owner, digest, simhash, alive, status), ~49 bytes/url.
 
-- a persisted per-snapshot SIGNATURE ledger (url, md5 digest, native
-  simhash -- ~40 bytes/url, operators/urls.snapshot_signature), so the
-  crawl diff never re-reads old page text;
-- `crawl_delta` classification per snapshot
-  (unchanged/touched/modified/added/removed);
-- detection + triple extraction over ONLY the urls that need it
-  (added+modified always; touched is a budget knob -- skipping it
-  keeps the prior mentions, the documented approximation);
-- an OWNERSHIP table (url -> tranche whose detection output is
-  current, + liveness) so the live mention set is a join away, and
-  `removed` pages tombstone out of the graph without rewriting any
-  tranche's mentions;
-- invalidate-and-rebuild graph refresh over the live mentions through
-  plans/checkpoint.build_graph, the same stages kg_pipeline runs
-  (linking cost is bounded by DISTINCT entities, not crawl size).
+- `owner` is the tranche whose detection output is current and `alive`
+  the liveness, so the live mention set is a join away, and `removed`
+  pages tombstone out of the graph without rewriting any tranche's
+  mentions;
+- `digest`/`simhash` are the last-seen signature
+  (operators/urls.snapshot_signature), so the next crawl diff never
+  re-reads old page text;
+- `status` is the crawl-delta class of this snapshot
+  (unchanged/touched/modified/added/removed).
+
+An append builds it in one full-outer join of the previous ownership
+(its live urls count as present) against the new snapshot's
+signatures (operators/urls.classify_signatures), then writes
+`tranches/<t>/mentions` and `tranches/<t>/triples` for ONLY the urls
+that need detection (added+modified always; touched is a budget knob --
+skipping it keeps the prior mentions, the documented approximation),
+then appends <t> to the ledger -- the commit point.  The graph is
+refreshed invalidate-and-rebuild over the live mentions through
+plans/checkpoint.build_graph, the same stages kg_pipeline runs (linking
+cost is bounded by DISTINCT entities, not crawl size).
 
 Everything is run_stage-managed (manifests, per-partition lineage,
 kill-resume), and appending snapshot T2 after T1 is pytest-gated
@@ -65,10 +71,9 @@ def read_ledger(root: str) -> list[str]:
         return json.load(f)["tranches"]
 
 
-def _append_ledger(root: str, tranche_id: str) -> None:
-    seq = read_ledger(root)
-    if tranche_id not in seq:
-        seq.append(tranche_id)
+def _write_ledger(root: str, seq: list[str]) -> None:
+    """Replace the ledger atomically: the commit point of an append and
+    of a compaction."""
     tmp = _ledger_path(root) + ".tmp"
     with open(tmp, "w") as f:
         json.dump({"tranches": seq}, f, indent=1)
@@ -82,12 +87,11 @@ def _ownership(spark: SparkSession, root: str,
 
 
 def append_snapshot(spark: SparkSession, root: str, tranche_id: str,
-                    pages: DataFrame, text_col: str = "text",
-                    redetect_touched: bool = True,
-                    full_snapshot: bool = True,
-                    near_hamming: int = 3) -> dict:
-    """Apply one crawl snapshot.  Idempotent per (root, tranche_id):
-    every step is a run_stage checkpoint, so a killed append resumes.
+                    pages: DataFrame, redetect_touched: bool = True,
+                    full_snapshot: bool = True) -> dict:
+    """Apply one crawl snapshot (a `url`, `text` table).  Idempotent per
+    (root, tranche_id): every step is a run_stage checkpoint and the
+    ledger append commits, so a killed append resumes.
 
     full_snapshot=True (default): urls absent from `pages` are
     tombstoned (a full crawl asserts the universe).  False: a PARTIAL
@@ -96,7 +100,7 @@ def append_snapshot(spark: SparkSession, root: str, tranche_id: str,
     Returns {"delta": {status: n}, "detected_urls": n}."""
     from redactify_spark.operators.detection import detect_mentions
     from redactify_spark.operators.triples import all_triples
-    from redactify_spark.operators.urls import (delta_from_signatures,
+    from redactify_spark.operators.urls import (classify_signatures,
                                                 snapshot_signature)
 
     troot = os.path.join(root, "tranches", tranche_id)
@@ -104,85 +108,62 @@ def append_snapshot(spark: SparkSession, root: str, tranche_id: str,
     prev = seq[-1] if seq else None
     if prev == tranche_id:
         prev = seq[-2] if len(seq) >= 2 else None
-
-    sig_new = run_stage(
-        spark, troot, "signatures",
-        lambda: snapshot_signature(pages, "url", text_col))
-
-    if prev is not None:
-        own_prev = _ownership(spark, root, prev)
-        old_sig = (own_prev.where("alive")
-                   .select("url", "digest", "simhash"))
-        delta = delta_from_signatures(old_sig, sig_new,
-                                      near_hamming=near_hamming)
-    else:
-        own_prev = None
-        delta = sig_new.select("url", F.lit("added").alias("status"),
-                               F.lit(None).cast("long").alias("hamming"))
-    delta = run_stage(spark, troot, "delta", lambda: delta)
-
     detect_statuses = list(_ALWAYS_DETECT) + (
         ["touched"] if redetect_touched else [])
-    to_detect = (pages.join(
-        delta.where(F.col("status").isin(detect_statuses))
-        .select("url").distinct(),
-        "url", "semi"))
 
+    def build_ownership() -> DataFrame:
+        sig = snapshot_signature(pages).withColumn("present", F.lit(True))
+        # a first snapshot diffs against an empty state, derived from
+        # `sig` so the optimizer prunes it to an empty relation (a
+        # createDataFrame would start a second Python worker daemon)
+        old = (_ownership(spark, root, prev) if prev is not None else
+               sig.withColumn("owner", F.lit(None).cast("string"))
+               .withColumn("alive", F.lit(False)).where(F.lit(False)))
+        j = classify_signatures(
+            old.select("url", F.col("alive").alias("present"), "owner",
+                       "digest", "simhash"),
+            sig)
+        status = F.col("status")
+        in_new = F.col("present_new")
+        # present on neither side: tombstoned before and absent now -- a
+        # partial crawl carries it forward verbatim, a full one forgets
+        # it.  Tested on the markers, not on `status`: a status filter
+        # pushed below the join would evaluate the simhash UDF twice
+        j = j.where(in_new | F.col("present_old") | F.lit(not full_snapshot))
+        return j.select(
+            "url",
+            F.when(status.isin(detect_statuses), F.lit(tranche_id))
+            .otherwise(F.col("owner_old")).alias("owner"),
+            # present urls carry THIS crawl's sigs (touched pages diff
+            # against their latest text next time even when detection
+            # was skipped); absent urls keep the last-seen sigs
+            F.when(in_new, F.col("digest_new"))
+            .otherwise(F.col("digest_old")).alias("digest"),
+            F.when(in_new, F.col("simhash_new"))
+            .otherwise(F.col("simhash_old")).alias("simhash"),
+            F.coalesce(in_new, F.col("present_old")
+                       & F.lit(not full_snapshot)).alias("alive"),
+            status)
+
+    own = run_stage(spark, os.path.join(root, "state", tranche_id),
+                    "ownership", build_ownership)
+    to_detect = pages.join(
+        own.where(F.col("status").isin(detect_statuses)).select("url"),
+        "url", "semi")
     mentions = run_stage(
         spark, troot, "mentions",
-        lambda: detect_mentions(to_detect, id_col="url",
-                                text_col=text_col)
+        lambda: detect_mentions(to_detect, id_col="url", text_col="text")
         .withColumn("_tranche", F.lit(tranche_id)))
     run_stage(
         spark, troot, "triples",
         lambda: all_triples(mentions.drop("_tranche"), id_col="url")
         .withColumn("_tranche", F.lit(tranche_id)))
-
-    # --- ownership update -------------------------------------------------
-    def build_ownership() -> DataFrame:
-        d = delta.join(sig_new.select("url",
-                                      F.col("digest").alias("_dg_new"),
-                                      F.col("simhash").alias("_sh_new")),
-                       "url", "left")
-        if own_prev is not None:
-            d = d.join(own_prev.select("url",
-                                       F.col("owner").alias("_own_old"),
-                                       F.col("digest").alias("_dg_old"),
-                                       F.col("simhash").alias("_sh_old")),
-                       "url", "left")
-        else:
-            d = (d.withColumn("_own_old", F.lit(None).cast("string"))
-                 .withColumn("_dg_old", F.lit(None).cast("string"))
-                 .withColumn("_sh_old", F.lit(None).cast("long")))
-        redetected = F.col("status").isin(detect_statuses)
-        present = F.col("status") != "removed"
-        own = (d.select(
-            "url",
-            F.when(redetected, F.lit(tranche_id))
-            .otherwise(F.col("_own_old")).alias("owner"),
-            # present urls carry THIS crawl's sigs (touched pages diff
-            # against their latest text next time even when detection
-            # was skipped); removed urls keep the last-seen sigs
-            F.when(present, F.col("_dg_new"))
-            .otherwise(F.col("_dg_old")).alias("digest"),
-            F.when(present, F.col("_sh_new"))
-            .otherwise(F.col("_sh_old")).alias("simhash"),
-            (present | F.lit(not full_snapshot)).alias("alive")))
-        if own_prev is not None and not full_snapshot:
-            # partial crawl: carry forward untouched urls verbatim
-            missing = own_prev.join(d.select("url"), "url", "anti")
-            own = own.unionByName(
-                missing.select("url", "owner", "digest", "simhash",
-                               "alive"))
-        return own
-
-    run_stage(spark, os.path.join(root, "state", tranche_id),
-              "ownership", build_ownership)
-    _append_ledger(root, tranche_id)
+    if tranche_id not in seq:
+        _write_ledger(root, seq + [tranche_id])
 
     stats = {r["status"]: r["n"] for r in
-             delta.groupBy("status").agg(F.count("*").alias("n"))
-             .collect()}
+             own.where(F.col("status").isNotNull()).groupBy("status")
+             .agg(F.count("*").alias("n")).collect()}
     return {"delta": stats,
             "detected_urls": int(sum(stats.get(s, 0)
                                      for s in detect_statuses))}
@@ -254,8 +235,6 @@ def compact_ledger(spark: SparkSession, root: str,
     last_own = _ownership(spark, root, seq[-1]).where("alive")
 
     troot = os.path.join(root, "tranches", cid)
-    run_stage(spark, troot, "signatures",
-              lambda: last_own.select("url", "digest", "simhash"))
     run_stage(spark, troot, "mentions",
               lambda: live_m.withColumn("_tranche", F.lit(cid)))
     run_stage(spark, troot, "triples",
@@ -265,13 +244,9 @@ def compact_ledger(spark: SparkSession, root: str,
                   "url", F.lit(cid).alias("owner"), "digest", "simhash",
                   F.lit(True).alias("alive")))
 
-    old = list(seq)
-    tmp = _ledger_path(root) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"tranches": [cid]}, f, indent=1)
-    os.replace(tmp, _ledger_path(root))
+    _write_ledger(root, [cid])
     if prune:
-        for t in old:
+        for t in seq:
             shutil.rmtree(os.path.join(root, "tranches", t),
                           ignore_errors=True)
             shutil.rmtree(os.path.join(root, "state", t),

@@ -224,7 +224,7 @@ def test_q113_crawl_delta_single_join_no_text_shuffle(spark, qs):
     """Crawl-delta plan shape: ONE full-outer join over the two
     signature tables, and the join's exchanges carry only the 40-byte
     signature columns (url/digest/simhash) -- page text never crosses
-    the shuffle (it dies at the localCheckpoint signature barrier)."""
+    the shuffle (it dies in the shuffle-free signature scan)."""
     plan = plan_of(qs["q113_crawl_delta"](spark, SF))
     tree = plan.split("\n\n(")[0]   # tree section only (details repeat
     assert "FullOuter" in plan      # every node once more)

@@ -106,9 +106,56 @@ def test_append_is_idempotent(applied, spark):
     assert R.read_ledger(root) == ["t1", "t2"]
 
 
+def test_append_stores_one_state_table(applied):
+    """Each append stores exactly its ownership state table plus the
+    detection output of the urls it re-detected."""
+    import os
+    root, _, _ = applied
+    for t in ("t1", "t2"):
+        assert set(os.listdir(f"{root}/tranches/{t}")) == {"mentions",
+                                                            "triples"}
+        assert set(os.listdir(f"{root}/state/{t}")) == {"ownership"}
+
+
+def test_failed_append_commits_nothing(applied, spark, tmp_path,
+                                       monkeypatch):
+    """A fault in detection leaves the ledger and the live set at T1,
+    with the T2 ownership stage (written first) complete; re-running the
+    append reuses it and equals an uninterrupted append."""
+    from redactify_spark.operators import detection
+    from redactify_spark.plans.checkpoint import read_manifest
+
+    root = str(tmp_path / "fault")
+    R.append_snapshot(spark, root, "t1", _pages(spark, range(60)))
+    t1_live = _collect(R.current_mentions(spark, root))
+
+    def fault(*args, **kwargs):
+        raise RuntimeError("injected detection fault")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(detection, "detect_mentions", fault)
+        with pytest.raises(RuntimeError, match="injected"):
+            R.append_snapshot(spark, root, "t2", _snap2(spark))
+    assert R.read_ledger(root) == ["t1"]
+    assert _collect(R.current_mentions(spark, root)) == t1_live
+    assert read_manifest(f"{root}/state/t2",
+                         "ownership")["status"] == "complete"
+
+    want_root, _, want_s2 = applied
+    assert R.append_snapshot(spark, root, "t2", _snap2(spark)) == want_s2
+    assert R.read_ledger(root) == ["t1", "t2"]
+    for live in (R.current_mentions, R.current_triples):
+        assert _collect(live(spark, root)) == _collect(live(spark,
+                                                            want_root))
+
+    def own(r):
+        return _collect(spark.read.parquet(f"{r}/state/t2/ownership/data"))
+    assert own(root) == own(want_root)
+
+
 def test_snapshot_without_url_column_fails_first_stage(spark, tmp_path):
     """Pages are keyed by `url`: a snapshot keyed by anything else is
-    rejected by the signatures stage, before any stage table exists."""
+    rejected by the ownership stage, before any stage table exists."""
     from pyspark.errors import AnalysisException
 
     root = tmp_path / "no_url"
@@ -174,10 +221,10 @@ def test_tombstoned_urls_leave_the_graph(applied, spark):
 
 
 def test_append_resumes_after_mid_pipeline_kill(spark, tmp_path):
-    """Kill-resume: wipe the ownership stage (the LAST step of an
-    append, as if the job died right before it) and re-append -- the
-    earlier stages short-circuit off their manifests and the final
-    state is byte-equal to the uninterrupted run."""
+    """Kill-resume: wipe the ownership stage (the FIRST step of an
+    append, the one the later stages read) and re-append -- the other
+    stages short-circuit off their manifests and the final state is
+    byte-equal to the uninterrupted run."""
     import shutil
 
     root = str(tmp_path / "resume")
@@ -188,8 +235,8 @@ def test_append_resumes_after_mid_pipeline_kill(spark, tmp_path):
     before = spark.read.parquet(own_dir + "/data").count()
     shutil.rmtree(own_dir)
 
-    # manifests of signatures/delta/mentions/triples still present ->
-    # resume recomputes ONLY ownership
+    # manifests of mentions/triples still present -> resume recomputes
+    # ONLY ownership
     import json
     s2 = R.append_snapshot(spark, root, "t2", _snap2(spark))
     m = json.load(open(f"{root}/tranches/t2/mentions/_manifest.json"))

@@ -123,10 +123,19 @@ def test_crawl_delta_threshold_knob(spark):
 def test_crawl_delta_null_and_empty_text(spark):
     """Empty and NULL text rows survive: empty==empty is unchanged,
     NULL text yields NULL digest -> never equal, lands in touched
-    (simhash 0 both sides)."""
-    got = _delta(spark, [("a", ""), ("b", "x")], [("a", ""), ("b", "x")])
+    (simhash 0 both sides).  A url with NULL text is still PRESENT on
+    its side: never added or removed while both snapshots hold it."""
+    got = _delta(spark,
+                 [("a", ""), ("b", "x"), ("c", None), ("d", "some text"),
+                  ("e", None)],
+                 [("a", ""), ("b", "x"), ("c", None), ("d", None),
+                  ("e", "some text")])
     assert got["a"] == ("unchanged", 0)
     assert got["b"] == ("unchanged", 0)
+    assert got["c"] == ("touched", 0)
+    for u in ("d", "e"):
+        assert got[u][0] in ("touched", "modified"), got[u]
+        assert got[u][1] is not None
 
 
 def test_crawl_delta_partition_invariant(spark):
@@ -143,15 +152,15 @@ def test_crawl_delta_partition_invariant(spark):
 
 def test_snapshot_signature_engine_parity(spark):
     """The Arrow-batched numpy majority fold is BIT-IDENTICAL to the
-    native per-bit aggregate folds on every signature column --
+    native per-bit aggregate folds of dedup.doc_simhash_native --
     including empty, null, unicode, and single-token texts."""
+    from redactify_spark.operators.dedup import doc_simhash_native
     rows = [(f"u{i}", f"some page text number {i} " * (i % 7))
             for i in range(40)]
     rows += [("empty", ""), ("null", None), ("one", "token"),
              ("uni", "café 中文 mixed ascii")]
     df = spark.createDataFrame(rows, "url string, text string")
-    a = {r.url: (r.digest, r.simhash)
-         for r in U.snapshot_signature(df, engine="pandas").collect()}
-    b = {r.url: (r.digest, r.simhash)
-         for r in U.snapshot_signature(df, engine="native").collect()}
+    a = {r.url: r.simhash for r in U.snapshot_signature(df).collect()}
+    b = {r.doc_id: r.simhash for r in doc_simhash_native(
+        df.withColumnRenamed("url", "doc_id")).collect()}
     assert a == b and len(a) == len(rows)
