@@ -338,50 +338,6 @@ PSEUDONYMIZE_TYPES: frozenset[str] = frozenset({
     "API_KEY", "DEPLOY_TOKEN", "AUTHENTICATION", "MEDICAL",
 })
 
-# --- Canonical entity-type alias map.  server/entity_type_mapping.json ----
-# None means "drop" (MISC/O).  Used by the full normalizer; the live server
-# endpoint applies only the PER/ORG/LOC subset + MISC drop
-# (server/server.py:160-178) -- see kernel.normalize_server().
-ENTITY_TYPE_MAPPING: dict[str, str | None] = {
-    "PERSON": "PERSON", "PER": "PERSON", "PEOPLE": "PERSON", "PERSONAL": "PERSON",
-    "INDIVIDUAL": "PERSON", "NAME": "PERSON", "NAME_STUDENT": "PERSON",
-    "PATIENT": "PERSON", "STAFF": "PERSON", "DOCTOR": "PERSON",
-    "ORG": "ORGANIZATION", "ORGANIZATION": "ORGANIZATION", "COMPANY": "ORGANIZATION",
-    "CORPORATION": "ORGANIZATION", "BUSINESS": "ORGANIZATION", "PATORG": "ORGANIZATION",
-    "HOSP": "ORGANIZATION",
-    "LOC": "LOCATION", "GPE": "LOCATION", "LOCATION": "LOCATION", "ADDRESS": "LOCATION",
-    "PLACE": "LOCATION", "STREET": "LOCATION", "CITY": "LOCATION", "STATE": "LOCATION",
-    "ZIP": "LOCATION", "ZIPCODE": "LOCATION", "POSTAL_CODE": "LOCATION",
-    "EMAIL": "EMAIL_ADDRESS", "EMAIL_ADDRESS": "EMAIL_ADDRESS", "MAIL": "EMAIL_ADDRESS",
-    "PHONE": "PHONE_NUMBER", "PHONE_NUMBER": "PHONE_NUMBER", "TEL": "PHONE_NUMBER",
-    "TELEPHONE": "PHONE_NUMBER", "MOBILE": "PHONE_NUMBER", "CELL": "PHONE_NUMBER",
-    "CREDIT_CARD": "CREDIT_CARD", "CREDIT": "CREDIT_CARD", "CC": "CREDIT_CARD",
-    "PAYMENT_CARD": "CREDIT_CARD", "CARD_NUMBER": "CREDIT_CARD", "PAN": "CREDIT_CARD",
-    "SSN": "SSN", "SOCIAL_SECURITY": "SSN", "SOCIAL_SECURITY_NUMBER": "SSN",
-    "IP": "IP_ADDRESS", "IP_ADDRESS": "IP_ADDRESS", "IPV4": "IP_ADDRESS", "IPV6": "IP_ADDRESS",
-    "MAC": "MAC_ADDRESS", "MAC_ADDRESS": "MAC_ADDRESS",
-    "URL": "URL", "URI": "URL", "WEBSITE": "URL", "LINK": "URL", "WEB": "URL",
-    "DATE": "DATE_TIME", "TIME": "DATE_TIME", "DATE_TIME": "DATE_TIME", "DATETIME": "DATE_TIME",
-    "PASSWORD": "PASSWORD", "PWD": "PASSWORD", "PASSWD": "PASSWORD", "PASSCODE": "PASSWORD",
-    "API_KEY": "API_KEY", "APIKEY": "API_KEY", "KEY": "API_KEY", "SECRET_KEY": "API_KEY",
-    "TOKEN": "DEPLOY_TOKEN", "DEPLOY_TOKEN": "DEPLOY_TOKEN", "ACCESS_TOKEN": "DEPLOY_TOKEN",
-    "SECRET_TOKEN": "DEPLOY_TOKEN", "OAUTH_TOKEN": "DEPLOY_TOKEN",
-    "AUTH": "AUTHENTICATION", "AUTHENTICATION": "AUTHENTICATION", "BEARER": "AUTHENTICATION",
-    "SESSION": "AUTHENTICATION",
-    "CREDENTIAL": "CREDENTIAL", "LOGIN": "CREDENTIAL", "USERNAME": "CREDENTIAL", "USER": "CREDENTIAL",
-    "FINANCIAL": "FINANCIAL", "ACCOUNT": "FINANCIAL", "ROUTING": "FINANCIAL", "BANK": "FINANCIAL",
-    "ACCOUNT_NUMBER": "FINANCIAL", "ROUTING_NUMBER": "FINANCIAL", "CVV": "FINANCIAL", "CVC": "FINANCIAL",
-    "ROLL_NUMBER": "ROLL_NUMBER", "ENROLLMENT": "ROLL_NUMBER", "STUDENT_ID": "ROLL_NUMBER",
-    "DEVICE": "DEVICE",
-    "PRODUCT": "PRODUCT",
-    "ID_NUMBER": "ID_NUMBER", "DRIVER_LICENSE": "ID_NUMBER", "PASSPORT": "ID_NUMBER",
-    "LICENSE_NUMBER": "ID_NUMBER", "ID": "ID_NUMBER",
-    "MEDICAL": "MEDICAL", "PATIENT_ID": "MEDICAL", "HEALTH_ID": "MEDICAL",
-    "MEDICAL_RECORD": "MEDICAL", "MRN": "MEDICAL", "PHN": "MEDICAL", "DIAGNOSIS": "MEDICAL",
-    "CONDITION": "MEDICAL", "PROCEDURE": "MEDICAL", "HOSPITAL": "MEDICAL", "PROVIDER_NUMBER": "MEDICAL",
-    "MISC": None, "O": None,
-}
-
 # --- Default per-type PII options.  server/default_pii_options.json -------
 DEFAULT_PII_OPTIONS: dict[str, bool] = {
     "PERSON": True, "ORGANIZATION": True, "LOCATION": True, "EMAIL_ADDRESS": True,

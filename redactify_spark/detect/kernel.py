@@ -54,12 +54,6 @@ for _p in C.PII_PATTERNS:
     _COMPILED_PII.append(_d)
 
 
-def _passes_prefilter(pdef: dict, text_lower: str) -> bool:
-    pf = pdef.get("prefilter")
-    if not ENABLE_PREFILTERS or pf is None:
-        return True
-    return any(lit in text_lower for lit in pf)
-
 _AMBIGUOUS_COMPANY_RES: list[tuple[re.Pattern, str, str]] = [
     (re.compile(rf"\b{re.escape(name)}\b", re.IGNORECASE), name, etype)
     for name, etype in C.AMBIGUOUS_COMPANIES.items()
@@ -214,7 +208,7 @@ def detect_regex(text: str) -> list[dict]:
     prefilters_on = ENABLE_PREFILTERS
     for compiled, pf, context, ptype, is_pw in _BANK_T:
         if prefilters_on and pf is not None:
-            # inline _passes_prefilter without a genexpr frame
+            # any(lit in text_lower for lit in pf), without a genexpr frame
             for lit in pf:
                 if lit in text_lower:
                     break
@@ -1113,11 +1107,6 @@ def apply_options(entities: list[dict],
         return entities
     return [e for e in entities
             if options.get(e.get("entity_group", "").upper(), True)]
-
-
-def normalize_full(etype: str) -> Optional[str]:
-    """Full alias->canonical map (entity_type_mapping.json); None = drop."""
-    return C.ENTITY_TYPE_MAPPING.get(etype.upper(), etype.upper())
 
 
 # ---------------------------------------------------------------------------

@@ -1,39 +1,17 @@
-"""Native column-expression ports of the anonymization scalar functions.
+"""Native column-expression port of an anonymization scalar function.
 
-SURVEY.md §2.4 maps each rewrite strategy to a Spark primitive; this
-module provides those primitives so the hot path can anonymize WITHOUT
-Python (whole-stage codegen).  Parity with the pure kernel
-(detect/anonymize.py) is asserted in tests/test_native_functions.py for
-every function here; format-interleaving masks (phone/credit-card/URL)
-stay in the kernel (positional reconstruction is not worth a codegen
-expression).
+SURVEY.md §2.4 maps each rewrite strategy to a Spark primitive.  A
+native expression anonymizes WITHOUT Python (whole-stage codegen).
+Parity with the pure kernel (detect/anonymize.py) and the absence of a
+Python UDF in the plan are asserted in tests/test_native_functions.py.
+The Spark anonymization stage runs the kernel itself; query q27 in
+`__spark_entry__.py` uses this expression.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from redactify_spark import config as C
-
-
-def pseudonymize_expr(value: Column, entity_type: Column) -> Column:
-    """A1: [TYPE-md5(value)[:6]] (anonymization_engine.py:229-242)."""
-    return F.concat(F.lit("["), F.upper(entity_type), F.lit("-"),
-                    F.substring(F.md5(value), 1, C.ANON_CONFIG["hash_length"]),
-                    F.lit("]"))
-
-
-def redact_expr(entity_type: Column) -> Column:
-    """A2: [REDACTED-TYPE] (:205)."""
-    return F.concat(F.lit("[REDACTED-"), entity_type, F.lit("]"))
-
-
-def full_mask_expr(token: Column, entity_type: Column) -> Column:
-    """A3: '*'*len, except pseudonymize-types (:244-248)."""
-    pseudo = F.upper(entity_type).isin(*sorted(C.PSEUDONYMIZE_TYPES))
-    return F.when(pseudo, pseudonymize_expr(token, entity_type)) \
-            .otherwise(F.repeat(F.lit("*"), F.length(token)))
 
 
 def mask_ssn_expr(ssn: Column) -> Column:
@@ -42,54 +20,3 @@ def mask_ssn_expr(ssn: Column) -> Column:
     return F.when(n > 4, F.concat(F.repeat(F.lit("*"), n - 4),
                                   F.substring(ssn, -4, 4))) \
             .otherwise(F.repeat(F.lit("*"), n))
-
-
-def mask_sensitive_token_expr(token: Column) -> Column:
-    """A9: keep first 2 if len>8 (:382-388)."""
-    n = F.length(token)
-    return F.when(n > 8, F.concat(F.substring(token, 1, 2),
-                                  F.repeat(F.lit("*"), n - 2))) \
-            .otherwise(F.repeat(F.lit("*"), n))
-
-
-def partial_mask_expr(token: Column) -> Column:
-    """A12 generic partial mask (:468-480)."""
-    n = F.length(token)
-    return (F.when(n <= 2, F.repeat(F.lit("*"), n))
-            .when(n <= 5, F.concat(F.substring(token, 1, 1),
-                                   F.repeat(F.lit("*"), n - 1)))
-            .when(n <= 10, F.concat(F.substring(token, 1, 2),
-                                    F.repeat(F.lit("*"), n - 4),
-                                    F.substring(token, -2, 2)))
-            .otherwise(F.concat(F.substring(token, 1, 2),
-                                F.repeat(F.lit("*"), n - 5),
-                                F.substring(token, -3, 3))))
-
-
-def custom_anonymize_expr(value: Column, entity_type: Column) -> Column:
-    """A13 per-type custom rules (:482-497)."""
-    t = F.upper(entity_type)
-    h6 = F.substring(F.md5(value), 1, 6)
-    h8 = F.substring(F.md5(value), 1, 8)
-    return (F.when(t.isin("MEDICAL_RECORD_NUMBER", "PATIENT_ID"),
-                   F.concat(F.lit("[MRN-"), h6, F.lit("]")))
-            .when(t.isin("CASE_NUMBER", "LEGAL_CITATION"),
-                  F.concat(F.lit("[CASE-"), h6, F.lit("]")))
-            .when(t.isin("ACCOUNT_NUMBER", "ROUTING_NUMBER"),
-                  F.concat(F.lit("[ACCT-"), h6, F.lit("]")))
-            .when(t.isin("API_KEY", "AUTHENTICATION_TOKEN"),
-                  F.concat(F.lit("[TOKEN-"), h8, F.lit("]")))
-            .otherwise(pseudonymize_expr(value, entity_type)))
-
-
-def normalize_type_expr(entity_type: Column) -> Column:
-    """Full alias->canonical normalization (entity_type_mapping.json) as a
-    literal-map lookup; unknown aliases pass through, MISC/O -> NULL."""
-    pairs = []
-    for alias, canon in C.ENTITY_TYPE_MAPPING.items():
-        pairs.append(F.lit(alias))
-        pairs.append(F.lit(canon))
-    mapping = F.create_map(*pairs)
-    t = F.upper(entity_type)
-    # map_contains_key distinguishes "maps to NULL (drop)" from "unknown"
-    return F.when(F.map_contains_key(mapping, t), mapping[t]).otherwise(t)

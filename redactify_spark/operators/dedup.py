@@ -40,16 +40,6 @@ PAIR_SPLIT = 8  # pair-space split: join parallelism = n_blocks * PAIR_SPLIT
 
 # --- exact dedup -----------------------------------------------------------
 
-def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(content_hash, n_dups, keep_id, dup_ids): groups with >1 member."""
-    h = docs.select(F.col("doc_id"), F.md5(F.col(text_col)).alias("content_hash"))
-    return (h.groupBy("content_hash")
-            .agg(F.count("*").alias("n_dups"),
-                 F.min("doc_id").alias("keep_id"),
-                 F.sort_array(F.collect_list("doc_id")).alias("dup_ids"))
-            .where(F.col("n_dups") > 1))
-
-
 def dedup_exact(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Keep the min-doc_id representative of each exact-content group."""
     w = Window.partitionBy(F.md5(F.col(text_col))).orderBy("doc_id")
@@ -805,29 +795,6 @@ def wide_embedding_bucket_count(embeddings: DataFrame,
         F.posexplode(F.array(*sig_exprs)).alias("_band", "_sig"))
     return (banded.groupBy("_band", "_sig").count()
             .where(F.col("count") > max_bucket).count())
-
-
-def dedup_embeddings(embeddings: DataFrame, threshold: float = 0.95,
-                     vec_col: str = "embedding",
-                     id_col: str = "vec_id",
-                     n_bands: int = EMB_BANDS,
-                     planes_per_band: int = EMB_PLANES_PER_BAND,
-                     dim: int | None = None) -> DataFrame:
-    """Keep one representative (min id) per embedding-cosine near-dup
-    cluster."""
-    from redactify_spark.operators.components import connected_components
-    pairs = embedding_dup_pairs(embeddings, threshold, vec_col, id_col,
-                                n_bands=n_bands,
-                                planes_per_band=planes_per_band, dim=dim)
-    comp = connected_components(
-        pairs.select(F.col("id_a").cast("string").alias("key_a"),
-                     F.col("id_b").cast("string").alias("key_b")))
-    rep = comp.groupBy("component").agg(
-        F.min(F.col("node").cast("long")).alias("keep"))
-    drop = (comp.join(rep, "component")
-            .where(F.col("node").cast("long") != F.col("keep"))
-            .select(F.col("node").cast("long").alias(id_col)))
-    return embeddings.join(drop, id_col, "left_anti")
 
 
 def duplicated_ngram_windows(docs: DataFrame, n: int = 8,

@@ -53,17 +53,13 @@ def detect_mentions(df: DataFrame,
                     id_col: str = "doc_id",
                     text_col: str = "text",
                     options: Optional[dict[str, bool]] = None,
-                    passthrough: tuple[str, ...] = (),
                     max_text_len: int | None = None) -> DataFrame:
     """Run the full reference detector chain over ``df[text_col]``.
 
-    Returns one row per post-processed mention, keyed by ``id_col``;
-    ``passthrough`` columns are copied onto every mention row (used by
-    the streaming stage to carry the event-time column through without a
-    stream-stream join).  Executors import the kernel module once per
-    python worker (pattern compilation amortized across all batches --
-    mirrors the reference's startup-time compile,
-    server/detection_engine.py:124-153).
+    Returns one row per post-processed mention, keyed by ``id_col``.
+    Executors import the kernel module once per python worker (pattern
+    compilation amortized across all batches -- mirrors the reference's
+    startup-time compile, server/detection_engine.py:124-153).
 
     ``max_text_len``: operational guard for web-scale corpora -- a
     multi-hundred-MB adversarial page would otherwise stall one task in
@@ -72,9 +68,8 @@ def detect_mentions(df: DataFrame,
     ``max_text_len`` characters BEFORE detection (spans stay valid:
     offsets index the truncated text which is a prefix of the
     original).  Default None preserves exact reference semantics."""
-    keep = [id_col, *passthrough]
     out_schema = T.StructType(
-        [T.StructField(c, df.schema[c].dataType) for c in keep]
+        [T.StructField(id_col, df.schema[id_col].dataType)]
         + MENTION_FIELDS)
     captured_options = dict(options) if options else None
 
@@ -86,7 +81,7 @@ def detect_mentions(df: DataFrame,
             rows = [t or "" for t in pdf[text_col].tolist()]
             if max_text_len is not None:
                 rows = [t[:max_text_len] for t in rows]
-            keeps = {c: pdf[c].tolist() for c in keep}
+            ids = pdf[id_col].tolist()
             rec: dict[str, list] = {f.name: [] for f in out_schema.fields}
             # when a batched NER backend is registered (transformer
             # inference), run it ONCE for the whole Arrow batch
@@ -97,8 +92,7 @@ def detect_mentions(df: DataFrame,
                         general_raw=batch_raw[i] if batch_raw else None):
                     surface = m.get("entity_text", "")
                     etype = m["entity_group"]
-                    for c in keep:
-                        rec[c].append(keeps[c][i])
+                    rec[id_col].append(ids[i])
                     rec["entity_group"].append(etype)
                     rec["start"].append(m["start"])
                     rec["end"].append(m["end"])
@@ -109,7 +103,7 @@ def detect_mentions(df: DataFrame,
             yield pd.DataFrame(rec)
 
     from redactify_spark.operators.partitioning import spread_for_cpu
-    sel = spread_for_cpu(df.select(*keep, text_col), id_col)
+    sel = spread_for_cpu(df.select(id_col, text_col), id_col)
     return sel.mapInPandas(scan, schema=out_schema)
 
 

@@ -35,7 +35,6 @@ import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 # Accent folding map (1 codepoint -> 1 codepoint, applied after
 # lower()).  Shared VERBATIM with the DuckDB oracle via oracle_sql()'s
@@ -338,67 +337,6 @@ def lang_id_ngram(docs: DataFrame, text_col: str = "text",
     return src.mapInPandas(
         score, schema="doc_id long, lang_pred string, "
                       "score_micro long, n_ngrams long")
-
-
-def lang_id_ngram_exploded(docs: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id") -> DataFrame:
-    """The pre-r6 all-native explode/join/agg formulation, kept as the
-    equivalence reference for lang_id_ngram (same rows bit-for-bit) and
-    as the plan the DuckDB oracle mirrors."""
-    spark = docs.sparkSession
-    rows, _ = build_profiles()
-    prof = spark.createDataFrame(rows, "ngram string, lang string, "
-                                       "logp_micro long")
-    def tris_over(col_name: str):
-        norm = normalize_expr(F.col(col_name))
-        padded = F.concat(F.lit(" "), norm, F.lit(" "))
-        chars = F.split(padded, "")
-        n = F.size(chars)
-        return F.when(
-            norm == "", F.array().cast("array<string>")
-        ).otherwise(F.zip_with(
-            F.zip_with(F.slice(chars, 1, n - 2), F.slice(chars, 2, n - 2),
-                       lambda a, b: F.concat(a, b)),
-            F.slice(chars, 3, n - 2),
-            lambda ab, c: F.concat(ab, c)))
-
-    # Trigrams as zip_with over three shifted slices of a one-time
-    # codepoint-array split.  TWO quadratic traps live here and both
-    # are avoided: (a) substring(padded, i, 3) per position seeks from
-    # the string start (UTF8String is variable-width) -- O(len^2) per
-    # document, measured 94.8 s on 5k sf0.1 docs; (b) element_at(chars,
-    # i) inside a transform() LAMBDA re-evaluates the split per element
-    # (lambda bodies are outside codegen subexpression elimination) --
-    # O(len^2) with an array build each time, worse still.  Slices as
-    # higher-order-function ARGUMENTS evaluate the split a constant
-    # number of times: O(len) per document (the char-level sibling of
-    # the r4 _stored_tokens word-gram fix).
-    # the trigram build (split + two zip_with concats per codepoint) is
-    # the expensive stage and runs BEFORE any exchange: fed by a
-    # single-file scan it would execute on one core (guide §2 -- 42.6 s
-    # measured on 50k docs at local[32]); spread the scan first
-    from redactify_spark.operators.partitioning import spread_for_cpu
-    src = spread_for_cpu(
-        docs.select(F.col(id_col).alias("doc_id"),
-                    F.col(text_col).alias("_lid_text")), "doc_id")
-    exploded = src.select("doc_id", F.explode(tris_over("_lid_text"))
-                          .alias("ngram"))
-    scores = (exploded.join(F.broadcast(prof), "ngram")
-              .groupBy("doc_id", "lang")
-              .agg(F.sum("logp_micro").alias("score_micro"),
-                   F.count("*").cast("long").alias("n_ngrams")))
-    rn = F.row_number().over(
-        Window.partitionBy("doc_id")
-              .orderBy(F.col("score_micro").desc(), F.col("lang").asc()))
-    best = (scores.withColumn("_rn", rn).where(F.col("_rn") == 1)
-            .select("doc_id", F.col("lang").alias("lang_pred"),
-                    "score_micro", "n_ngrams"))
-    ids = docs.select(F.col(id_col).alias("doc_id")).distinct()
-    return (ids.join(best, "doc_id", "left")
-            .select("doc_id",
-                    F.coalesce("lang_pred", F.lit("und")).alias("lang_pred"),
-                    F.coalesce("score_micro", F.lit(0)).alias("score_micro"),
-                    F.coalesce("n_ngrams", F.lit(0)).alias("n_ngrams")))
 
 
 # ---------------------------------------------------------------------------

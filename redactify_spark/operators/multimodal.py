@@ -376,18 +376,6 @@ def extract_features(media: DataFrame, fake_decode: bool = True) -> DataFrame:
         feats, schema=_FEATURE_SCHEMA)
 
 
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plan: one row per (media_id, frame_ts) --
-    computed natively from metadata (no decode), the scheduling half of a
-    frame-extraction pipeline."""
-    return (media.where(F.col("kind") == "video")
-            .select("media_id",
-                    F.explode(F.sequence(
-                        F.lit(0),
-                        F.greatest(F.col("meta.duration_ms") - 1, F.lit(0)),
-                        F.lit(every_ms))).alias("frame_ts")))
-
-
 def synth_image_media(spark: SparkSession, n: int,
                       partitions: int | None = None,
                       size: int = 48) -> DataFrame:
@@ -489,141 +477,3 @@ def phash_dup_pairs(hashes: DataFrame, max_hamming: int = 10) -> DataFrame:
             .dropDuplicates(["id_a", "id_b"])
             .select("id_a", "id_b", ham.cast("int").alias("hamming"))
             .where(F.col("hamming") <= max_hamming))
-
-
-# --- real audio path (PCM WAV, pure numpy) -----------------------------------
-
-def encode_wav(samples: np.ndarray, rate: int = 8000) -> bytes:
-    """int16 mono samples -> RIFF/WAVE PCM bytes (pure numpy/struct)."""
-    import struct
-    data = np.ascontiguousarray(samples, dtype="<i2").tobytes()
-    hdr = (b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-           + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, rate,
-                                   rate * 2, 2, 16)
-           + b"data" + struct.pack("<I", len(data)))
-    return hdr + data
-
-
-def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
-    """RIFF/WAVE 16-bit PCM -> (float32 mono samples in [-1, 1], rate).
-    Stereo is averaged to mono; non-PCM raises NotImplementedError."""
-    import struct
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a WAV")
-    i, rate, channels, bits, data = 12, None, None, None, None
-    while i + 8 <= len(payload):
-        cid = payload[i:i + 4]
-        size = struct.unpack_from("<I", payload, i + 4)[0]
-        body = payload[i + 8:i + 8 + size]
-        if cid == b"fmt ":
-            fmt, channels, rate = struct.unpack_from("<HHI", body, 0)
-            bits = struct.unpack_from("<H", body, 14)[0]
-            if fmt != 1 or bits != 16:
-                raise NotImplementedError("only 16-bit PCM WAV supported")
-        elif cid == b"data":
-            data = body
-        i += 8 + size + (size & 1)
-    if rate is None or data is None:
-        raise ValueError("missing fmt/data chunk")
-    x = np.frombuffer(data, dtype="<i2").astype(np.float32) / 32768.0
-    if channels and channels > 1:
-        x = x[:len(x) - len(x) % channels].reshape(-1, channels).mean(axis=1)
-    return x, rate
-
-
-def audio_fingerprint64(samples: np.ndarray, n_windows: int = 65) -> int:
-    """64-bit energy-delta fingerprint (Philips-robust-hash-lite): RMS
-    energy over n_windows equal slices; bit i = energy[i+1] > energy[i].
-    Deterministic, robust to small additive noise and amplitude scaling
-    (monotone transforms preserve the deltas' signs in the typical
-    case)."""
-    n = len(samples)
-    if n < n_windows:
-        samples = np.pad(samples, (0, n_windows - n))
-        n = n_windows
-    edges = np.linspace(0, n, n_windows + 1).astype(int)
-    e = np.array([float((samples[a:b] ** 2).mean()) if b > a else 0.0
-                  for a, b in zip(edges[:-1], edges[1:])])
-    bits = 0
-    for i in range(n_windows - 1):
-        if e[i + 1] > e[i]:
-            bits |= 1 << i
-    return bits & 0x7FFFFFFFFFFFFFFF
-
-
-_AUDIO_FEATURE_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("duration_ms", T.IntegerType()),
-    T.StructField("rms", T.DoubleType()),
-    T.StructField("zero_cross_rate", T.DoubleType()),
-    T.StructField("fingerprint", T.LongType()),
-])
-
-
-def audio_features(media: DataFrame) -> DataFrame:
-    """REAL WAV decode -> duration / RMS / zero-crossing rate / 64-bit
-    fingerprint, one Arrow-batched pass."""
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in _AUDIO_FEATURE_SCHEMA.fields}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                x, rate = decode_wav(bytes(payload))
-                rows["media_id"].append(int(mid))
-                rows["duration_ms"].append(int(len(x) * 1000 / rate))
-                rows["rms"].append(float(np.sqrt((x ** 2).mean())))
-                rows["zero_cross_rate"].append(
-                    float((np.diff(np.signbit(x)) != 0).mean()))
-                rows["fingerprint"].append(audio_fingerprint64(x))
-            yield pd.DataFrame(rows)
-
-    return media.select("media_id", "payload").mapInPandas(
-        feats, schema=_AUDIO_FEATURE_SCHEMA)
-
-
-def synth_audio_media(spark: SparkSession, n: int,
-                      partitions: int | None = None,
-                      rate: int = 8000, ms: int = 500) -> DataFrame:
-    """REAL audio corpus: every payload is a decodable PCM WAV (two
-    deterministic sine partials + hash-seeded envelope per id).  Ids
-    with id % 10 == 1 are id-1's signal plus light noise -- planted
-    near-dups for the fingerprint path."""
-    rng = spark.range(0, n, 1,
-                      partitions or spark.sparkContext.defaultParallelism)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"media_id": [], "kind": [], "payload": [], "meta": []}
-            t = np.arange(int(rate * ms / 1000)) / rate
-            for i in pdf["id"].tolist():
-                i = int(i)
-                base = i - 1 if i % 10 == 1 else i
-                dig = hashlib.md5(f"aud{base}".encode()).digest()
-                seed = int.from_bytes(dig[:4], "big")
-                f1 = 100 + seed % 900
-                f2 = 1000 + (seed >> 10) % 2000
-                # hash-diverse amplitude envelope (3 modulation partials
-                # with hash phases): the fingerprint tracks windowed
-                # energy, so envelopes must differ per base or unrelated
-                # clips collide
-                env = 0.35
-                for k in range(3):
-                    fm = 1 + dig[4 + k] % 16
-                    ph = dig[8 + k] / 255.0 * 2 * np.pi
-                    env = env + (0.12 - 0.02 * k) * np.sin(
-                        2 * np.pi * fm * t + ph)
-                x = env * (np.sin(2 * np.pi * f1 * t)
-                           + 0.5 * np.sin(2 * np.pi * f2 * t))
-                if i != base:
-                    pert = np.frombuffer(
-                        (hashlib.md5(f"anoise{i}".encode()).digest()
-                         * (len(t) // 16 + 1))[:len(t)], dtype=np.uint8)
-                    x = x + (pert.astype(np.float32) / 255.0 - 0.5) * 0.02
-                samples = np.clip(x * 20000, -32768, 32767).astype(np.int16)
-                rows["media_id"].append(i)
-                rows["kind"].append("audio")
-                rows["payload"].append(encode_wav(samples, rate))
-                rows["meta"].append({"mime": "audio/wav", "width": None,
-                                     "height": None, "duration_ms": ms})
-            yield pd.DataFrame(rows)
-
-    return rng.mapInPandas(gen, schema=MEDIA_SCHEMA)

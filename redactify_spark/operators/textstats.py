@@ -45,13 +45,6 @@ def token_count_expr(text: Column) -> Column:
             .otherwise(F.size(F.split(t, r"\s+")))
 
 
-def bpe_ish_token_count_expr(text: Column) -> Column:
-    """BPE-ish subword proxy: count of alternating alpha runs / digit runs /
-    single punctuation marks (the usual pre-tokenizer regex)."""
-    return F.size(F.regexp_extract_all(
-        text, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), 0))
-
-
 def quality_features(docs: DataFrame, text_col: str = "text",
                      passthrough: tuple[str, ...] = ()) -> DataFrame:
     """Per-document quality features + a composite score in [0,1]:
@@ -157,17 +150,6 @@ def gopher_rules(docs: DataFrame, text_col: str = "text",
         ok_sym.alias("ok_symbol_ratio"),
         ok_rep.alias("ok_repetition"),
         (ok_words & ok_mwl & ok_sym & ok_rep).alias("gopher_pass"))
-
-
-def doc_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-pass combined stats table."""
-    t = F.col(text_col)
-    return docs.select(
-        "doc_id",
-        lang_id_expr(t).alias("lang_pred"),
-        token_count_expr(t).alias("n_tokens"),
-        bpe_ish_token_count_expr(t).alias("n_subwords"),
-        fingerprint_expr(t).alias("fingerprint"))
 
 
 def tfidf_topk(docs: DataFrame, text_col: str = "text", k: int = 3,

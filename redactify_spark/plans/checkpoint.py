@@ -17,8 +17,11 @@ partitioning-insensitive, cheap (one extra aggregation over data already
 in memory at write time).
 
 Per-partition granularity: the parquet write already materializes one
-file per partition; the manifest records the per-partition row counts so
-a resumed run can verify integrity without rescanning content.
+file per partition, and the manifest records the per-partition row
+counts read from the parquet footers.  A resume does not verify them:
+`run_stage` reuses any stage whose manifest says `status == complete`,
+without checking its counts or what it was built from (ROADMAP
+direction 2).
 """
 
 from __future__ import annotations
@@ -171,18 +174,6 @@ def run_stage(spark: SparkSession, root: str, stage: str,
         json.dump(manifest, f, indent=1)
     os.replace(mp + ".tmp", mp)
     return persisted
-
-
-def _union_stage_tables(spark: SparkSession, root: str,
-                        sub: str) -> DataFrame:
-    """Union all tranches' `sub` tables: the run_stage data dirs
-    <root>/tranches/<tranche>/<sub>/data."""
-    base = os.path.join(root, "tranches")
-    dirs = sorted(
-        os.path.join(base, t, sub, "data")
-        for t in os.listdir(base)
-        if os.path.isdir(os.path.join(base, t, sub, "data")))
-    return spark.read.parquet(*dirs)
 
 
 def read_manifest(root: str, stage: str) -> dict:

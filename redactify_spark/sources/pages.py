@@ -183,7 +183,7 @@ def synth_pages(spark: SparkSession, n_docs: int,
     Built with spark.range -> mapInPandas so generation is distributed
     (each partition synthesizes its own id range; no driver-side loop,
     scales to any n_docs).  `start` offsets the id range -- disjoint
-    tranches for incremental/streaming tests."""
+    tranches for recrawl appends."""
     rng = spark.range(start, start + n_docs, 1,
                       partitions or spark.sparkContext.defaultParallelism)
 

@@ -48,63 +48,3 @@ def test_append_tranche_skips_completed(spark, tmp_path):
     R.append_snapshot(spark, root, "t1", pages, full_snapshot=False)
     m2 = CP.read_manifest(f"{root}/tranches/t1", "mentions")
     assert m1 == m2
-
-
-def test_incremental_ann_index_matches_rebuild(spark, tmp_path):
-    """Tranche-by-tranche ANN indexing == one-shot rebuild, byte-exact
-    (sig + cell per vector), and stored-index queries match inline
-    lsh_topk over the union."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from redactify_spark.operators.similarity import (_hyperplanes,
-                                                      cell_assign_expr,
-                                                      lsh_topk,
-                                                      signature_expr)
-    from redactify_spark.plans import incremental_ann as IA
-
-    dim = 16
-
-    def vecs(lo, hi):
-        rows = [(i, [float(np.sin(0.7 * (i + 1) * (j + 1)))
-                     for j in range(dim)]) for i in range(lo, hi)]
-        return spark.createDataFrame(rows,
-                                     "vec_id long, embedding array<float>")
-
-    root = str(tmp_path / "ann_idx")
-    IA.index_tranche(spark, root, "t0", vecs(0, 120), dim,
-                     n_planes=6, n_cells=8)
-    IA.index_tranche(spark, root, "t1", vecs(120, 200), dim,
-                     n_planes=6, n_cells=8)
-
-    got = {r.vec_id: (r.sig, r.cell)
-           for r in IA.full_index(spark, root).collect()}
-    assert len(got) == 200
-
-    # one-shot rebuild with the SAME frozen centroids
-    import json
-    with open(IA._centroids_path(root)) as f:
-        cents = np.asarray(json.load(f))
-    planes = _hyperplanes(dim, 6)
-    want = {r.vec_id: (r.sig, r.cell)
-            for r in vecs(0, 200).select(
-                "vec_id",
-                signature_expr(F.col("embedding"), planes).alias("sig"),
-                cell_assign_expr(F.col("embedding"), cents).alias("cell"))
-            .collect()}
-    assert got == want
-
-    # stored-index query == inline query over the union
-    q = [float(np.sin(0.7 * 8 * (j + 1))) for j in range(dim)]
-    stored = [(r.vec_id, round(r.cos, 9))
-              for r in IA.query_topk(spark, root, q, k=5,
-                                     n_planes=6).collect()]
-    inline = [(r.vec_id, round(r.cos, 9))
-              for r in lsh_topk(vecs(0, 200), q, k=5, dim=dim,
-                                n_planes=6).collect()]
-    assert stored == inline and len(stored) == 5
-
-    # resume: re-indexing an existing tranche is a no-op read-back
-    again = IA.index_tranche(spark, root, "t0", vecs(0, 120), dim,
-                             n_planes=6, n_cells=8)
-    assert again.count() == 120

@@ -26,56 +26,13 @@ def _column_parity(df, expr, pyfn):
         assert r.got == pyfn(r.tok, r.ty), (r.tok, r.ty, r.got)
 
 
-def test_pseudonymize_parity(tok_df):
-    _column_parity(tok_df, N.pseudonymize_expr(F.col("tok"), F.col("ty")),
-                   lambda t, ty: A.pseudonymize_value(t, ty))
-
-
-def test_redact_parity(tok_df):
-    _column_parity(tok_df, N.redact_expr(F.col("ty")),
-                   lambda t, ty: A.redact_value(ty))
-
-
-def test_full_mask_parity(tok_df):
-    _column_parity(tok_df, N.full_mask_expr(F.col("tok"), F.col("ty")),
-                   lambda t, ty: A.full_mask_token(t, ty))
-
-
 def test_mask_ssn_parity(tok_df):
     _column_parity(tok_df, N.mask_ssn_expr(F.col("tok")),
                    lambda t, ty: A.mask_ssn(t))
 
 
-def test_mask_sensitive_parity(tok_df):
-    _column_parity(tok_df, N.mask_sensitive_token_expr(F.col("tok")),
-                   lambda t, ty: A.mask_sensitive_token(t))
-
-
-def test_partial_mask_parity(tok_df):
-    _column_parity(tok_df, N.partial_mask_expr(F.col("tok")),
-                   lambda t, ty: A.partial_mask_token(t))
-
-
-def test_custom_anonymize_parity(tok_df):
-    _column_parity(tok_df, N.custom_anonymize_expr(F.col("tok"), F.col("ty")),
-                   lambda t, ty: A.custom_anonymize(t, ty))
-
-
-def test_normalize_type_expr(spark):
-    from redactify_spark.detect.kernel import normalize_full
-    aliases = ["PER", "ORG", "GPE", "EMAIL", "CC", "MISC", "O",
-               "NEWTYPE", "mrn", "passport"]
-    df = spark.createDataFrame([(a,) for a in aliases], "ty string")
-    rows = df.select("ty", N.normalize_type_expr(F.col("ty")).alias("canon")) \
-             .collect()
-    for r in rows:
-        assert r.canon == normalize_full(r.ty), (r.ty, r.canon)
-
-
 def test_codegen_no_python(spark, tok_df):
     """The native exprs must not introduce python UDF nodes."""
-    plan = tok_df.select(
-        N.pseudonymize_expr(F.col("tok"), F.col("ty")),
-        N.partial_mask_expr(F.col("tok")))._jdf.queryExecution() \
-        .executedPlan().toString()
+    plan = tok_df.select(N.mask_ssn_expr(F.col("tok")))._jdf \
+        .queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

@@ -1,287 +1,5 @@
-"""Structured Streaming detection stage (availableNow trigger, memory
+"""Structured Streaming stream-stream join (availableNow trigger, memory
 sink) -- beyond-reference addition; batch/stream parity asserted."""
-
-import pytest
-from pyspark.sql import functions as F
-
-from redactify_spark.operators.detection import detect_mentions
-from redactify_spark.sources.pages import synth_pages
-from redactify_spark.streaming import detect_stream as DS
-
-
-@pytest.fixture(scope="module")
-def pages_dir(spark, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("pages_stream"))
-    # several files -> several micro-batches (maxFilesPerTrigger=1)
-    synth_pages(spark, 60, partitions=3).write.mode("overwrite").parquet(d)
-    return d
-
-
-def test_stream_mentions_matches_batch(spark, pages_dir):
-    stream = DS.stream_pages(spark, pages_dir)
-    assert stream.isStreaming
-    q = DS.run_to_memory_sink(DS.stream_mentions(stream), "m_stream")
-    q.awaitTermination(120)
-    got = {(r.url, r.entity_group, r.start, r.end)
-           for r in spark.sql("select * from m_stream").collect()}
-    batch = detect_mentions(spark.read.parquet(pages_dir),
-                            id_col="url", text_col="text",
-                            passthrough=("warc_ts",))
-    want = {(r.url, r.entity_group, r.start, r.end)
-            for r in batch.collect()}
-    assert got == want and got
-
-
-def test_windowed_counts_with_watermark(spark, pages_dir):
-    stream = DS.stream_pages(spark, pages_dir)
-    agg = DS.windowed_mention_counts(stream, window="1 minute",
-                                     watermark="2 minutes")
-    q = (agg.writeStream.format("memory").queryName("w_counts")
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    rows = spark.sql("select * from w_counts").collect()
-    assert rows
-    assert {r.entity_group for r in rows} >= {"PERSON", "EMAIL_ADDRESS"}
-    # windows align to the minute and counts are positive
-    assert all(r.window_start.second == 0 and r.n_mentions > 0
-               for r in rows)
-
-
-def test_stateful_entity_registry(spark, pages_dir, tmp_path):
-    """applyInPandasWithState: each pseudo_key emitted exactly once across
-    micro-batches (maxFilesPerTrigger=1 -> multiple batches)."""
-    from redactify_spark.streaming.stateful import entity_registry_stream
-
-    stream = DS.stream_pages(spark, pages_dir)
-    mentions = DS.stream_mentions(stream).drop("warc_ts")
-    reg = entity_registry_stream(mentions)
-    q = (reg.writeStream.format("memory").queryName("registry")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(180)
-    rows = spark.sql("select * from registry").collect()
-    keys = [r.pseudo_key for r in rows]
-    assert len(keys) == len(set(keys)), "a key was emitted twice"
-    batch = detect_mentions(spark.read.parquet(pages_dir),
-                            id_col="url", text_col="text")
-    expected_keys = {r.pseudo_key for r in
-                     batch.select("pseudo_key").distinct().collect()}
-    assert set(keys) == expected_keys
-
-
-def test_stream_triples_matches_batch(spark, pages_dir, tmp_path):
-    """Streaming triple ingestion (foreachBatch append) over several
-    micro-batches equals the batch pipeline over the same pages; a
-    restart with a new tranche appends only the new pages' triples."""
-    from redactify_spark.operators.triples import all_triples
-
-    out = str(tmp_path / "triples_out")
-    ckpt = str(tmp_path / "triples_ckpt")
-    q = DS.stream_triples(spark, pages_dir, out, ckpt)
-    q.awaitTermination(180)
-    got = {tuple(r) for r in
-           spark.read.parquet(out)
-           .select("subj", "pred", "obj", "prov_doc").collect()}
-    batch = all_triples(
-        detect_mentions(spark.read.parquet(pages_dir),
-                        id_col="url", text_col="text"), id_col="url")
-    want = {tuple(r) for r in
-            batch.select("subj", "pred", "obj", "prov_doc").collect()}
-    assert got == want and got
-
-    # restart with no new files: nothing is reprocessed or re-appended
-    n_before = spark.read.parquet(out).count()
-    q2 = DS.stream_triples(spark, pages_dir, out, ckpt)
-    q2.awaitTermination(180)
-    assert spark.read.parquet(out).count() == n_before
-
-
-def test_stateful_registry_survives_restart(spark, tmp_path):
-    """State-store recovery: stop the registry stream after the first
-    tranche of files, append a second tranche, RESTART from the same
-    checkpoint -- first-sightings must stay exactly-once across the
-    restart (keys emitted before the crash are not re-emitted; new keys
-    are)."""
-    from redactify_spark.streaming.stateful import entity_registry_stream
-
-    src = str(tmp_path / "pages")
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "registry_out")
-    synth_pages(spark, 24, partitions=2).write.mode("overwrite").parquet(src)
-
-    def run():
-        # fault-tolerant file sink (the memory sink cannot recover from a
-        # checkpoint); each restart resumes source offsets AND state
-        stream = DS.stream_pages(spark, src)
-        mentions = DS.stream_mentions(stream).drop("warc_ts")
-        reg = entity_registry_stream(mentions)
-        q = (reg.writeStream.format("parquet")
-             .option("path", out)
-             .option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(180)
-        return [r.pseudo_key for r in spark.read.parquet(out).collect()]
-
-    first = set(run())
-    assert first, "first run emitted nothing"
-
-    # "crash" happened; a second crawl tranche lands (docs 24..47: they
-    # share many entities with the first tranche plus some new ones)
-    seen_urls = synth_pages(spark, 24, partitions=2).select("url")
-    synth_pages(spark, 48, partitions=2) \
-        .join(seen_urls, "url", "left_anti") \
-        .write.mode("append").parquet(src)
-
-    all_emitted = run()
-    assert len(all_emitted) == len(set(all_emitted)), \
-        "a key emitted before the restart was re-emitted after it"
-    batch = detect_mentions(spark.read.parquet(src),
-                            id_col="url", text_col="text")
-    all_keys = {r.pseudo_key for r in
-                batch.select("pseudo_key").distinct().collect()}
-    assert set(all_emitted) == all_keys
-    assert set(all_emitted) - first, "second tranche added no new keys"
-
-
-def test_session_stream_gap_and_timeout_closures(spark, tmp_path):
-    """Continuous sessionization (applyInPandasWithState +
-    EventTimeTimeout): sessions close inline on the gap rule OR by
-    watermark timeout; still-open sessions are not emitted."""
-    import datetime as dt
-    import os
-
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from redactify_spark.streaming.sessions import session_stream
-
-    t0 = dt.datetime(2024, 1, 1, 10, 0, 0)
-    m = dt.timedelta(minutes=1)
-
-    def write_batch(name, rows, mtime):
-        pdf = pd.DataFrame(rows, columns=["user_id", "ts", "value"])
-        tbl = pa.table({
-            "user_id": pa.array(pdf["user_id"], pa.int64()),
-            "ts": pa.array(pd.to_datetime(pdf["ts"]).dt.tz_localize("UTC"),
-                           pa.timestamp("us", tz="UTC")),
-            "value": pa.array(pdf["value"], pa.float64()),
-        })
-        path = str(tmp_path / "ev" / name)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        pq.write_table(tbl, path)
-        os.utime(path, (mtime, mtime))
-
-    # batch 1: two sessions for user 1 (A: 2 events, B: 1 event), one
-    # 3-event session for user 2, plus open tails at t0+4h for both
-    batch1 = [
-        (1, t0, 1.0), (1, t0 + 5 * m, 2.0),            # session A
-        (1, t0 + 120 * m, 4.0),                        # session B
-        (2, t0 + 10 * m, 1.0), (2, t0 + 12 * m, 1.0),
-        (2, t0 + 14 * m, 1.0),                         # user-2 session
-        (1, t0 + 240 * m, 8.0), (2, t0 + 240 * m, 9.0),  # open tails
-    ]
-    # batches 2/3: user 3 far in the future -- advance the watermark so
-    # the t0+4h tails close by TIMEOUT during batch 3
-    batch2 = [(3, t0 + 300 * m, 1.0)]
-    batch3 = [(3, t0 + 301 * m, 1.0)]
-    write_batch("b1.parquet", batch1, 1_000)
-    write_batch("b2.parquet", batch2, 2_000)
-    write_batch("b3.parquet", batch3, 3_000)
-
-    stream = (spark.readStream
-              .schema("user_id long, ts timestamp, value double")
-              .option("maxFilesPerTrigger", 1)
-              .parquet(str(tmp_path / "ev")))
-    q = (session_stream(stream, gap_minutes=30.0)
-         .writeStream.format("memory").queryName("sessions")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(180)
-
-    got = {(r.user_id, r.session_start_us, r.session_end_us,
-            r.n_events, r.total_value)
-           for r in spark.sql("select * from sessions").collect()}
-
-    us = lambda ts: int(ts.timestamp() * 1_000_000)
-    expected = {
-        (1, us(t0), us(t0 + 5 * m), 2, 3.0),            # A (gap rule)
-        (1, us(t0 + 120 * m), us(t0 + 120 * m), 1, 4.0),  # B (gap rule)
-        (2, us(t0 + 10 * m), us(t0 + 14 * m), 3, 3.0),
-        (1, us(t0 + 240 * m), us(t0 + 240 * m), 1, 8.0),  # timeout
-        (2, us(t0 + 240 * m), us(t0 + 240 * m), 1, 9.0),  # timeout
-    }
-    assert got == expected
-    # user 3's session is still open -> not emitted
-    assert not any(u == 3 for u, *_ in got)
-
-    # batch parity: the closed sessions match the batch operator's
-    # stats for the same (user, session) windows
-    from redactify_spark.operators import temporal as TP
-    all_events = spark.createDataFrame(
-        [(i, u, ts, v) for i, (u, ts, v)
-         in enumerate(batch1 + batch2 + batch3)],
-        "event_id long, user_id long, ts timestamp, value double")
-    batch_sessions = {
-        (r.user_id, r.n_events, r.total_value)
-        for r in TP.session_stats(all_events, gap_minutes=30.0).collect()}
-    assert {(u, n, v) for u, _, _, n, v in got} <= batch_sessions
-
-
-def test_stream_url_dedup_within_watermark(spark, tmp_path):
-    """dropDuplicatesWithinWatermark over the canonical URL: recrawls
-    inside the horizon are suppressed across micro-batches."""
-    import datetime as dt
-    import os
-
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from redactify_spark.streaming.ingest import dedup_pages_stream
-
-    t0 = dt.datetime(2024, 1, 1, 10, 0, 0)
-
-    def write_batch(name, rows, mtime):
-        pdf = pd.DataFrame(rows, columns=["url", "warc_ts", "text"])
-        tbl = pa.table({
-            "url": pa.array(pdf["url"], pa.string()),
-            "warc_ts": pa.array(
-                pd.to_datetime(pdf["warc_ts"]).dt.tz_localize("UTC"),
-                pa.timestamp("us", tz="UTC")),
-            "text": pa.array(pdf["text"], pa.string()),
-        })
-        path = str(tmp_path / "pg" / name)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        pq.write_table(tbl, path)
-        os.utime(path, (mtime, mtime))
-
-    m = dt.timedelta(minutes=1)
-    write_batch("b1.parquet", [
-        ("https://example.com/a?utm_source=x", t0, "a1"),
-        ("https://other.com/b", t0, "b1"),
-    ], 1_000)
-    write_batch("b2.parquet", [
-        ("HTTPS://EXAMPLE.com/a", t0 + 5 * m, "a2-recrawl"),   # dup of a1
-        ("https://third.com/c", t0 + 5 * m, "c1"),
-    ], 2_000)
-
-    stream = (spark.readStream
-              .schema("url string, warc_ts timestamp, text string")
-              .option("maxFilesPerTrigger", 1)
-              .parquet(str(tmp_path / "pg")))
-    q = (dedup_pages_stream(stream, watermark="1 hour")
-         .writeStream.format("memory").queryName("pages_dedup")
-         .option("checkpointLocation", str(tmp_path / "ckpt2"))
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    rows = spark.sql("select * from pages_dedup").collect()
-    texts = {r.text for r in rows}
-    # the recrawl is suppressed; three distinct canonical urls survive
-    assert "a2-recrawl" not in texts
-    assert texts == {"a1", "b1", "c1"}
-    assert len({r.canonical_url for r in rows}) == 3
 
 
 def test_stream_stream_conversion_join_matches_batch(spark, tmp_path):
@@ -327,241 +45,3 @@ def test_stream_stream_conversion_join_matches_batch(spark, tmp_path):
     got = {(r.user_id, r.click_id, r.purchase_id, r.delay_us)
            for r in spark.sql("select * from conv_pairs").collect()}
     assert got == want
-
-
-def test_stream_triples_bucketed_sink_exactly_once(spark, tmp_path):
-    """Production-sink unification (r3 #7): streaming triples land in a
-    batch_id-partitioned, subj-bucketed managed table.  Pins:
-    (a) stream output == batch pipeline output;
-    (b) restart with NO new files re-appends nothing;
-    (c) CRASH REPLAY: deleting the last streaming commit marker makes
-        Spark re-run that batch with the same batch_id -- the dynamic
-        partition overwrite leaves the table byte-identical
-        (exactly-once, not at-least-once);
-    (d) a new tranche after restart lands as a new batch partition only;
-    (e) a self-join on the bucket key plans SortMergeJoin with zero
-        Exchange (the warehouse read is shuffle-free)."""
-    import os
-    import shutil
-
-    from redactify_spark.operators.triples import all_triples
-    from redactify_spark.streaming import bucket_sink as BS
-
-    table = "stream_triples_bucketed_t"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    wh = spark.conf.get("spark.sql.warehouse.dir", "").removeprefix("file:")
-    if wh:
-        shutil.rmtree(os.path.join(wh, table), ignore_errors=True)
-    src = str(tmp_path / "pages")
-    ckpt = str(tmp_path / "ckpt")
-    synth_pages(spark, 40, partitions=2).write.mode("overwrite").parquet(src)
-
-    def table_rows():
-        # a replayed batch rewrites its partition with fresh file names;
-        # drop this session's cached file listing before reading
-        spark.catalog.refreshTable(table)
-        return sorted(tuple(str(v) for v in r)
-                      for r in spark.table(table).collect())
-
-    q = BS.stream_triples_bucketed(spark, src, table, ckpt)
-    assert q.awaitTermination(300)
-    q.stop()
-    got = {(r.subj, r.pred, r.obj, r.prov_doc)
-           for r in spark.table(table).collect()}
-    batch = all_triples(
-        detect_mentions(spark.read.parquet(src),
-                        id_col="url", text_col="text"), id_col="url")
-    want = {tuple(r) for r in
-            batch.select("subj", "pred", "obj", "prov_doc").collect()}
-    assert got == want and got
-
-    # (b) restart, no new files
-    before = table_rows()
-    q2 = BS.stream_triples_bucketed(spark, src, table, ckpt)
-    assert q2.awaitTermination(300)
-    q2.stop()
-    assert table_rows() == before
-
-    # (c) crash replay: drop the newest commit marker; the restarted
-    # stream re-runs that batch with the SAME batch_id
-    commits = sorted(os.listdir(os.path.join(ckpt, "commits")))
-    last = [c for c in commits if not c.startswith(".")][-1]
-    os.remove(os.path.join(ckpt, "commits", last))
-    # the local ChecksumFileSystem keeps a sibling .crc; a stale one
-    # makes the rewrite look like a concurrent-query conflict
-    crc = os.path.join(ckpt, "commits", f".{last}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-    q3 = BS.stream_triples_bucketed(spark, src, table, ckpt)
-    assert q3.awaitTermination(300)
-    q3.stop()
-    assert table_rows() == before
-
-    # (d) new tranche -> only new pages' triples appear, in a NEW batch
-    batches_before = {r.batch_id for r in
-                      spark.table(table).select("batch_id")
-                      .distinct().collect()}
-    synth_pages(spark, 12, partitions=1, start=1_000_000) \
-        .write.mode("append").parquet(src)
-    q4 = BS.stream_triples_bucketed(spark, src, table, ckpt)
-    assert q4.awaitTermination(300)
-    q4.stop()
-    rows_after = table_rows()
-    assert len(rows_after) > len(before)
-    new_batches = {r.batch_id for r in
-                   spark.table(table).select("batch_id")
-                   .distinct().collect()} - batches_before
-    assert new_batches
-    # pre-existing partitions untouched
-    n_old = spark.table(table).where(
-        ~F.col("batch_id").isin(*[int(b) for b in new_batches])).count()
-    assert n_old == len(before)
-
-    # (e) Exchange-free self-join on the bucket key
-    a = spark.table(table).hint("merge")
-    b = spark.table(table).hint("merge")
-    plan = a.join(b, "subj")._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" in plan and "Exchange" not in plan
-
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
-def test_bucketed_sink_table_exists_on_empty_source(spark, tmp_path):
-    """ADVICE r4: availableNow over an EMPTY source dir never invokes
-    foreachBatch -- the sink table must exist anyway (eagerly created
-    from the transformed stream schema) so spark.table(table) after
-    awaitTermination returns an empty table instead of raising."""
-    import os
-    import shutil
-
-    from redactify_spark.operators.detection import detect_mentions
-    from redactify_spark.operators.triples import all_triples
-    from redactify_spark.streaming import bucket_sink as BS
-
-    table = "stream_bucketed_empty_src_t"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    wh = spark.conf.get("spark.sql.warehouse.dir", "").removeprefix("file:")
-    if wh:
-        shutil.rmtree(os.path.join(wh, table), ignore_errors=True)
-    src = str(tmp_path / "pages_empty")
-    os.makedirs(src)
-    # an empty dir has no schema to infer -- supply it like a real
-    # deployment would (the sink contract under test is unchanged)
-    schema = synth_pages(spark, 1).schema
-    stream = (spark.readStream.schema(schema).parquet(src)
-              .selectExpr("url", "text"))
-    q = BS.stream_into_bucketed_table(
-        stream, table, "subj", str(tmp_path / "ckpt_empty"),
-        transform=lambda b: all_triples(
-            detect_mentions(b, id_col="url", text_col="text"),
-            id_col="url"))
-    q.awaitTermination(120)
-    q.stop()
-    out = spark.table(table)
-    assert out.count() == 0
-    assert "subj" in out.columns and "batch_id" in out.columns
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
-def test_bucketed_sink_probe_failure_is_logged(spark, tmp_path, caplog):
-    """ADVICE r5: the eager schema probe keeps its swallow-and-fall-back
-    contract (a merely empty-batch-intolerant transform must not break
-    sink startup), but the swallowed exception is now LOGGED so a
-    genuinely broken transform is diagnosable before data arrives."""
-    import logging
-    import os
-
-    from redactify_spark.streaming import bucket_sink as BS
-
-    table = "stream_bucketed_probe_log_t"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    src = str(tmp_path / "pages_probe_log")
-    os.makedirs(src)
-    schema = synth_pages(spark, 1).schema
-    stream = (spark.readStream.schema(schema).parquet(src)
-              .selectExpr("url", "text"))
-
-    def broken(batch):
-        raise ValueError("transform exploded on schema probe")
-
-    with caplog.at_level(logging.WARNING,
-                         logger="redactify_spark.streaming.bucket_sink"):
-        q = BS.stream_into_bucketed_table(
-            stream, table, "url", str(tmp_path / "ckpt_probe_log"),
-            transform=broken)
-        q.awaitTermination(120)
-        q.stop()
-    msgs = [r.message for r in caplog.records
-            if "eager schema probe failed" in r.message]
-    assert msgs, "probe failure was swallowed silently"
-    assert "ValueError" in msgs[0] and table in msgs[0]
-    # fall-back contract intact: no eager table, and the empty source
-    # never produced a batch to create it lazily either
-    assert not spark.catalog.tableExists(table)
-
-
-def test_recrawl_delta_stream_matches_batch_classifier(spark, tmp_path):
-    """Streaming recrawl classification == the batch crawl_delta
-    restricted to recrawled urls, across multiple micro-batches
-    (maxFilesPerTrigger=1), with exactly-once from the bucketed sink."""
-    from redactify_spark.operators.urls import (crawl_delta,
-                                                snapshot_signature)
-    from redactify_spark.streaming.recrawl_stream import \
-        recrawl_delta_stream
-
-    import shutil as _sh
-    spark.sql("drop table if exists recrawl_deltas")
-    _sh.rmtree(spark.conf.get("spark.sql.warehouse.dir")
-               .removeprefix("file:") + "/recrawl_deltas",
-               ignore_errors=True)
-
-    old_rows = [(f"https://s{i % 4}.example/p{i}",
-                 f"page body number {i} " * 8) for i in range(40)]
-    old = spark.createDataFrame(old_rows, "url string, text string")
-    sig_path = str(tmp_path / "ledger_sigs")
-    snapshot_signature(old).write.parquet(sig_path)
-
-    # recrawl stream: batch A = urls 0..19 (some touched/modified),
-    # batch B = urls 20..29 unchanged + 5 brand-new urls
-    def churn(i, t):
-        if i % 5 == 1:
-            return t + "  "                      # touched (hamming 0)
-        if i % 5 == 2:
-            return "entirely different body " * 6  # modified
-        return t
-    rows_a = [(u, churn(i, t)) for i, (u, t) in enumerate(old_rows[:20])]
-    rows_b = [(u, t) for u, t in old_rows[20:30]] + \
-             [(f"https://s9.example/n{i}", f"fresh page {i}")
-              for i in range(5)]
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(str(tmp_path / "in"), exist_ok=True)
-    for name, rows in (("a.parquet", rows_a), ("b.parquet", rows_b)):
-        pq.write_table(
-            pa.table({"url": pa.array([r[0] for r in rows], pa.string()),
-                      "text": pa.array([r[1] for r in rows],
-                                       pa.string())}),
-            str(tmp_path / "in" / name))
-
-    stream = (spark.readStream.schema("url string, text string")
-              .option("maxFilesPerTrigger", 1)
-              .parquet(str(tmp_path / "in")))
-    q = recrawl_delta_stream(stream, sig_path, "recrawl_deltas",
-                             str(tmp_path / "ckpt"))
-    q.awaitTermination(180)
-
-    got = {r.url: (r.status, r.hamming)
-           for r in spark.table("recrawl_deltas").collect()}
-    recrawled = spark.createDataFrame(rows_a + rows_b,
-                                      "url string, text string")
-    expected = {r.url: (r.status, r.hamming)
-                for r in crawl_delta(old, recrawled).collect()
-                if r.status != "removed"}
-    assert got == expected
-    assert len(got) == 35
-    statuses = {s for s, _ in got.values()}
-    assert statuses == {"unchanged", "touched", "modified", "added"}
-    spark.sql("drop table if exists recrawl_deltas")
