@@ -21,11 +21,25 @@ fixed detector order (presidio, regex, contextual, models, fallback).
 The ensuing stable sort by ``start`` (server/detection_engine.py:683)
 then yields a deterministic total order, and the P6 dedup "highest
 score, first inserted wins" tiebreak becomes reproducible.
+
+Cost: every pure optimization of the regex scans sits behind the
+``ENABLE_PREFILTERS`` switch and gives the plain path's spans exactly.
+Besides literal prefilters, each rule led by ``\\b`` or an optional group
+is tried only at the candidate starts of a per-document index
+(``_AnchorIndex``) instead of at every position, rules that compile to
+the same program scan once per document, the D8 context gate cuts long
+window pieces, and P10 overlap removal is a sweep.  A document's cost
+then grows linearly with its length, also on long runs of the email and
+URL classes (tests/test_kernel_anchors.py).
 """
 
 from __future__ import annotations
 
+import bisect
 import re
+from collections import Counter
+from re import _compiler as _sre_compiler
+from re import _parser as _sre
 from typing import Iterable, Optional
 
 from redactify_spark import config as C
@@ -34,10 +48,265 @@ from redactify_spark import config as C
 # Pattern compilation (once per process / Spark python worker)
 # ---------------------------------------------------------------------------
 
-# Prefilters (C.REGEX_PREFILTERS / C.PII_PREFILTERS) prune patterns whose
-# necessary literal is absent from lower(text) -- a pure optimization; the
-# equivalence flag lets tests A/B both paths.
+# The A/B switch for every pure optimization of the regex scans; off, each
+# rule is one plain `finditer`.  On, it covers:
+# - prefilters (C.REGEX_PREFILTERS / C.PII_PREFILTERS): skip a rule whose
+#   necessary literal is absent from lower(text);
+# - anchored scans (_AnchorIndex): `re` skips ahead at C speed only when a
+#   pattern starts with a bare literal or class, so a rule led by `\b` or
+#   an optional group runs its full matcher at every position.  Such a
+#   rule runs as `match(text, s)` at each candidate start s at or after
+#   the previous match's end instead.  That yields exactly finditer's
+#   leftmost non-overlapping matches: every position where a match can
+#   start is a candidate, and `match` still checks `\b` and lookbehind
+#   against the text before s;
+# - one scan per document for rules that compile to the same program.
+# Equivalence: tests/test_kernel_spans.py::test_prefilter_equivalence and
+# tests/test_kernel_anchors.py.
 ENABLE_PREFILTERS = True
+
+
+# ---------------------------------------------------------------------------
+# Anchored scans.  A rule's anchor is derived once from its parsed pattern:
+# - "digit": `\b` then a digit: starts of digit runs with a boundary;
+# - "upper": `\b` then ASCII [A-Z0-9], case-sensitive;
+# - "sign": any [+(\d] character (a rule led by optional groups);
+# - (x, run): `\b R+ x ...` where the class R excludes the literal x.  A
+#   start inside the maximal R-run before an x consumes the whole run, so
+#   every boundary in one run matches, or fails, alike: the run's first
+#   boundary at or after the previous match's end is its one candidate.
+#   This makes the email and URL-domain rules linear on long runs of R.
+# Anything else (the first atom unrecognised, or an IGNORECASE letter
+# class, which `ſ` and the Kelvin sign also match) keeps plain finditer.
+# ---------------------------------------------------------------------------
+
+_START_FINDERS = {
+    # a leading class gives `re` its fast prefix scan; the lookbehind then
+    # keeps the characters with a word boundary before them
+    "digit": re.compile(r"\d(?<!\w\d)"),
+    "upper": re.compile(r"[A-Z0-9](?<!\w[A-Z0-9])"),
+    "sign": re.compile(r"[+(\d]"),
+}
+_BOUNDARY = re.compile(r"\b")
+
+
+def _atom_anchors(op, av, ignorecase: bool) -> set[str]:
+    """The start classes that contain every character one atom matches."""
+    if op is _sre.CATEGORY:
+        return {"digit", "sign"} if av is _sre.CATEGORY_DIGIT else set()
+    if op is _sre.LITERAL:
+        lo = hi = av
+    elif op is _sre.RANGE:
+        lo, hi = av
+    else:
+        return set()
+    if 48 <= lo and hi <= 57:                      # ASCII digits
+        return {"digit", "upper", "sign"}
+    if 65 <= lo and hi <= 90 and not ignorecase:   # ASCII A-Z
+        return {"upper"}
+    if lo == hi and chr(lo) in "+(":
+        return {"sign"}
+    return set()
+
+
+def _first_atoms(seq) -> Optional[tuple[list, bool]]:
+    """(atoms any match's first character passes, whether `seq` can match
+    empty), or None when an element is not recognised."""
+    atoms: list = []
+    for op, av in seq:
+        if op is _sre.LITERAL:
+            return atoms + [(op, av)], False
+        if op is _sre.IN:
+            return atoms + list(av), False
+        if op in (_sre.MAX_REPEAT, _sre.MIN_REPEAT):
+            found = _first_atoms(av[2])
+            nullable = av[0] == 0
+        elif op is _sre.SUBPATTERN and not (av[1] or av[2]):
+            found = _first_atoms(av[3])
+            nullable = False
+        elif op is _sre.BRANCH:
+            alts = [_first_atoms(alt) for alt in av[1]]
+            if None in alts:
+                return None
+            found = ([a for sub, _ in alts for a in sub],
+                     any(n for _, n in alts))
+            nullable = False
+        else:
+            return None
+        if found is None:
+            return None
+        atoms += found[0]
+        if not (nullable or found[1]):
+            return atoms, False
+    return atoms, True
+
+
+def _run_anchor(seq, flags: int):
+    """(x, compiled R+) for a pattern `\\b R+ x ...` whose class R
+    excludes the literal x, else None."""
+    if len(seq) < 2 or seq[0][0] is not _sre.MAX_REPEAT \
+            or seq[1][0] is not _sre.LITERAL:
+        return None
+    lo, hi, body = seq[0][1]
+    x = chr(seq[1][1])
+    if lo < 1 or hi is not _sre.MAXREPEAT or len(body) != 1 \
+            or body[0][0] is not _sre.IN:
+        return None
+    if flags & re.IGNORECASE and not x.lower() == x == x.upper():
+        return None
+    parts = []
+    for op, av in body[0][1]:
+        if op is _sre.LITERAL:
+            parts.append(re.escape(chr(av)))
+        elif op is _sre.RANGE:
+            parts.append(f"{re.escape(chr(av[0]))}-{re.escape(chr(av[1]))}")
+        else:
+            return None
+    run = re.compile(f"[{''.join(parts)}]+", flags)
+    return None if run.match(x) else (x, run)
+
+
+def _anchor_of(pat: re.Pattern):
+    """A rule's anchor (see above), or None for plain finditer."""
+    if pat.flags & (re.ASCII | re.LOCALE):
+        return None
+    parsed = _sre.parse(pat.pattern, pat.flags)
+    if parsed.getwidth()[0] == 0:
+        return None
+    seq = list(parsed)
+    boundary = seq[0] == (_sre.AT, _sre.AT_BOUNDARY)
+    if boundary:
+        seq = seq[1:]
+        run = _run_anchor(seq, pat.flags)
+        if run is not None:
+            return run
+    elif seq[0][0] in (_sre.LITERAL, _sre.IN):
+        return None  # `re` already skips ahead to this literal or class
+    found = _first_atoms(seq)
+    if found is None or found[1]:
+        return None
+    common = {"digit", "upper", "sign"}
+    for op, av in found[0]:
+        common &= _atom_anchors(op, av, bool(pat.flags & re.IGNORECASE))
+    for kind in ("digit", "upper") if boundary else ():
+        if kind in common:
+            return kind
+    return "sign" if "sign" in common else None
+
+
+def _shared_scans(pats: list[re.Pattern]) -> dict[re.Pattern, tuple]:
+    """A key per rule whose source text repeats: its compiled `re` program.
+    Rules with equal keys find the same spans, so they scan once per
+    document (a digit-only rule compiles alike with and without
+    IGNORECASE)."""
+    repeated = Counter(p.pattern for p in pats)
+    return {p: (p.groups, tuple(_sre_compiler._code(
+                _sre.parse(p.pattern, p.flags), p.flags)))
+            for p in pats if repeated[p.pattern] > 1}
+
+
+class _AnchorIndex:
+    """One document's candidate starts, built lazily and shared by every
+    rule that reads them, plus the spans of each rule program scanned so
+    far (the bank and the Presidio registry hold copies of five) and,
+    for the D8 gate, where each context word occurs in the lowered
+    text."""
+    __slots__ = ("text", "_starts", "_reversed", "_spans", "_lower",
+                 "_occurrences")
+
+    def __init__(self, text: str):
+        self.text = text
+        self._starts: dict[str, list[int]] = {}
+        self._reversed: Optional[str] = None
+        self._spans: dict[object, list[tuple[int, int]]] = {}
+        self._lower: Optional[str] = None
+        self._occurrences: dict[str, list[int]] = {}
+
+    def lower_keeps_offsets(self) -> bool:
+        """Whether text.lower() maps each character to one, so an offset
+        into the text is one into its lowered form."""
+        if self._lower is None:
+            self._lower = self.text.lower()
+        return len(self._lower) == len(self.text)
+
+    def occurs(self, word: str, start: int, end: int) -> bool:
+        """Whether lower(text[start:end]) holds the ASCII `word`; needs
+        lower_keeps_offsets()."""
+        found = self._occurrences.get(word)
+        if found is None:
+            found = self._occurrences[word] = []
+            at = self._lower.find(word)
+            while at != -1:
+                found.append(at)
+                at = self._lower.find(word, at + 1)
+        i = bisect.bisect_left(found, start)
+        return i < len(found) and found[i] + len(word) <= end
+
+    def matches(self, pat: re.Pattern, anchor) -> Iterable[re.Match]:
+        """Exactly `pat.finditer(text)`."""
+        text = self.text
+        if anchor is None or not ENABLE_PREFILTERS:
+            return pat.finditer(text)
+        if isinstance(anchor, str):
+            starts = self._starts.get(anchor)
+            if starts is None:
+                starts = self._starts[anchor] = [
+                    m.start() for m in _START_FINDERS[anchor].finditer(text)]
+            return _match_at(pat, starts, text)
+        if self._reversed is None:
+            self._reversed = text[::-1]
+        return _match_at_runs(pat, anchor, text, self._reversed)
+
+    def spans(self, pat: re.Pattern, anchor) -> list[tuple[int, int]]:
+        """The spans of `matches`, scanned once per shared program."""
+        if not ENABLE_PREFILTERS:
+            return [m.span() for m in pat.finditer(self.text)]
+        key = _SHARED_SCANS.get(pat, pat)
+        got = self._spans.get(key)
+        if got is None:
+            got = self._spans[key] = [m.span()
+                                      for m in self.matches(pat, anchor)]
+        return got
+
+
+def _match_at(pat: re.Pattern, starts: list[int], text: str
+              ) -> list[re.Match]:
+    """finditer's matches, tried only at the sorted candidate `starts`."""
+    out = []
+    match = pat.match
+    pos = 0
+    for s in starts:
+        if s >= pos:
+            m = match(text, s)
+            if m is not None:
+                out.append(m)
+                pos = m.end()
+    return out
+
+
+def _match_at_runs(pat: re.Pattern, anchor, text: str, reversed_text: str
+                   ) -> list[re.Match]:
+    """finditer's matches of a `\\b R+ x ...` rule: one candidate per
+    R-run that ends at an x."""
+    x, run = anchor
+    n = len(text)
+    out = []
+    pos = 0
+    a = text.find(x)
+    while a != -1:
+        # the R-run that ends at this x, read right to left
+        r = run.match(reversed_text, n - a)
+        if r is not None:
+            lo = max(a - (r.end() - (n - a)), pos)
+            b = _BOUNDARY.search(text, lo, a)
+            if b is not None and b.start() < a:
+                m = pat.match(text, b.start())
+                if m is not None:
+                    out.append(m)
+                    pos = m.end()
+        a = text.find(x, max(a + 1, pos))
+    return out
+
 
 _COMPILED_BANK: list[dict] = []
 for _p in C.REGEX_BANK:
@@ -89,46 +358,68 @@ _NEARBY_TAIL = re.compile(_NEARBY_INDICATOR + r"\s*$", re.IGNORECASE)
 _TOKEN_RE = re.compile(r"\S+")
 
 
+# A window piece longer than 2 * _CTX_KEEP + 1 characters (part of one
+# huge token) is cut to its first and last _CTX_KEEP characters around a
+# "\0" that no context word holds.  A word found across pieces uses at
+# most len(word) - 1 characters of each, so the cut window still shows
+# it; a word inside one piece is looked up in the document's occurrence
+# index (_AnchorIndex.occurs).  A gate then costs O(window words), not
+# O(token length), and a page with no whitespace stays linear.
+_CTX_KEEP = max(len(w) for r in C.REGEX_BANK for w in r["context"])
+
+
 def _word_window(text: str, span_start: int, span_end: int,
-                 tokens: list[tuple[int, int]] | None, ctx: int) -> str:
+                 tokens: list[tuple[int, int]] | None, ctx: int,
+                 cut: list[tuple[int, int]] | None = None) -> str:
     """The reference's word-window (detection_engine.py:628-632):
     ``text[:start].split()[-ctx:] + text[end:].split()[:ctx]`` -- computed
     from a per-document token-offset index instead of re-splitting the
     whole prefix/suffix per candidate.  A token straddling a boundary
     contributes its truncated piece, exactly as the slice-then-split does.
+    With a `cut` list, long pieces are cut (see _CTX_KEEP) and their
+    ranges appended to it.
     """
     if tokens is None:
         before = text[:span_start].split()[-ctx:] if span_start > 0 else []
         after = text[span_end:].split()[:ctx] if span_end < len(text) else []
         return " ".join(before + after).lower()
-    before: list[str] = []
-    after: list[str] = []
-    import bisect
+    before: list[tuple[int, int]] = []
+    after: list[tuple[int, int]] = []
     if span_start > 0:
         idx = bisect.bisect_left(tokens, (span_start, span_start))
         if idx > 0 and tokens[idx - 1][1] > span_start:
             # token straddling span_start -> truncated head piece
             partial_i = idx - 1
-            before = [text[s:e] for s, e in
-                      tokens[max(0, partial_i - ctx + 1):partial_i]]
-            before.append(text[tokens[partial_i][0]:span_start])
+            before = tokens[max(0, partial_i - ctx + 1):partial_i]
+            before.append((tokens[partial_i][0], span_start))
         else:
-            before = [text[s:e] for s, e in tokens[max(0, idx - ctx):idx]]
+            before = tokens[max(0, idx - ctx):idx]
     if span_end < len(text):
         idx = bisect.bisect_left(tokens, (span_end, -1))
         if idx > 0 and tokens[idx - 1][1] > span_end:
             # token straddling span_end -> truncated tail piece first
-            partial = text[span_end:tokens[idx - 1][1]]
-            after = [partial] + [text[s:e]
-                                 for s, e in tokens[idx:idx + ctx - 1]]
+            after = [(span_end, tokens[idx - 1][1])] + tokens[idx:idx + ctx - 1]
         else:
-            after = [text[s:e] for s, e in tokens[idx:idx + ctx]]
-    return " ".join(before + after).lower()
+            after = tokens[idx:idx + ctx]
+    ranges = before + after
+    longest = 2 * _CTX_KEEP + 1
+    if cut is None or all(e - s <= longest for s, e in ranges):
+        return " ".join([text[s:e] for s, e in ranges]).lower()
+    pieces = []
+    for s, e in ranges:
+        if e - s > longest:
+            cut.append((s, e))
+            pieces.append(text[s:s + _CTX_KEEP] + "\0"
+                          + text[e - _CTX_KEEP:e])
+        else:
+            pieces.append(text[s:e])
+    return " ".join(pieces).lower()
 
 
 def _has_context(text: str, span_start: int, span_end: int,
                  context_words: list[str],
-                 tokens: list[tuple[int, int]] | None = None) -> bool:
+                 tokens: list[tuple[int, int]] | None = None,
+                 index: Optional[_AnchorIndex] = None) -> bool:
     if not context_words:
         return True
     matched_text = text[span_start:span_end]
@@ -140,10 +431,16 @@ def _has_context(text: str, span_start: int, span_end: int,
     # NB: window is applied to the WORD list (as implemented in the
     # reference, despite its comment saying characters)
     ctx = C.ENGINE_CONFIG["context_window"]
-    context_text = _word_window(text, span_start, span_end, tokens, ctx)
+    cut: list[tuple[int, int]] | None = (
+        [] if index is not None and index.lower_keeps_offsets() else None)
+    context_text = _word_window(text, span_start, span_end, tokens, ctx, cut)
     for word in context_words:
-        if word.lower() in context_text:
+        word = word.lower()
+        if word in context_text:
             return True
+        for s, e in cut or ():
+            if index.occurs(word, s, e):
+                return True
     nearby = text[max(0, span_start - 20):min(len(text), span_end + 10)]
     ml = matched_text.lower()
     nl = nearby.lower()
@@ -164,12 +461,14 @@ def _has_context(text: str, span_start: int, span_end: int,
 # its three lookaheads test the SUFFIX from the match start, and
 # suffix-contains conditions are monotone (once false they stay false),
 # so a candidate run matches iff run_start <= min(last letter, last
-# digit, last special).  Equivalence fuzz-tested in
+# digit, last special).  The bank compiles the rule with IGNORECASE, so
+# its letter class also takes `ſ`, the Kelvin sign, `ı` and `İ`; the run
+# and last-letter patterns do too.  Equivalence fuzz-tested in
 # tests/test_kernel_spans.py::test_password_fast_path_equivalence.
 _PASSWORD_COMPOSITE_SRC = (r"(?=.*[A-Za-z])(?=.*\d)(?=.*[$#@!%^&*()_+])"
                            r"[A-Za-z\d$#@!%^&*()_+]{8,}")
-_PASSWORD_RUN = re.compile(r"[A-Za-z\d$#@!%^&*()_+]{8,}")
-_LAST_ALPHA = re.compile(r"[A-Za-z](?=[^A-Za-z]*$)")
+_PASSWORD_RUN = re.compile(r"[A-Za-z\d$#@!%^&*()_+]{8,}", re.IGNORECASE)
+_LAST_ALPHA = re.compile(r"[A-Za-z](?=[^A-Za-z]*$)", re.IGNORECASE)
 _LAST_DIGIT = re.compile(r"\d(?=\D*$)")
 _LAST_SPECIAL = re.compile(r"[$#@!%^&*()_+](?=[^$#@!%^&*()_+]*$)")
 
@@ -197,16 +496,20 @@ def _password_composite_spans(text: str):
 # is_password_composite): hoists the per-doc-per-rule dict lookups to
 # load time.  Same bank, same order.
 _BANK_T = [(d["compiled"], d.get("prefilter"), d.get("context"),
-            d["type"], d["pattern"] == _PASSWORD_COMPOSITE_SRC)
+            d["type"], d["pattern"] == _PASSWORD_COMPOSITE_SRC,
+            _anchor_of(d["compiled"]))
            for d in _COMPILED_BANK]
 
 
-def detect_regex(text: str) -> list[dict]:
+def detect_regex(text: str, index: Optional[_AnchorIndex] = None
+                 ) -> list[dict]:
     out = []
     text_lower = text.lower()
     tokens: list[tuple[int, int]] | None = None
     prefilters_on = ENABLE_PREFILTERS
-    for compiled, pf, context, ptype, is_pw in _BANK_T:
+    if index is None:
+        index = _AnchorIndex(text)
+    for compiled, pf, context, ptype, is_pw, anchor in _BANK_T:
         if prefilters_on and pf is not None:
             # any(lit in text_lower for lit in pf), without a genexpr frame
             for lit in pf:
@@ -220,7 +523,7 @@ def detect_regex(text: str) -> list[dict]:
         ctx_list = context if context is not None else []
         if prefilters_on and is_pw:
             for start, end in _password_composite_spans(text):
-                if _has_context(text, start, end, ctx_list, tokens):
+                if _has_context(text, start, end, ctx_list, tokens, index):
                     out.append({
                         "entity_group": ptype,
                         "start": start, "end": end,
@@ -228,14 +531,13 @@ def detect_regex(text: str) -> list[dict]:
                         "detector": "regex_internal",
                     })
             continue
-        for m in compiled.finditer(text):
-            start, end = m.span()
+        for start, end in index.spans(compiled, anchor):
             matched = text[start:end]
             if len(matched) < 3 and not context:
                 continue
             if not matched.strip():
                 continue
-            if _has_context(text, start, end, ctx_list, tokens):
+            if _has_context(text, start, end, ctx_list, tokens, index):
                 out.append({
                     "entity_group": ptype,
                     "start": start, "end": end,
@@ -507,18 +809,25 @@ _PRESIDIO_CONTEXT_BOOST = 0.35  # Presidio context-enhancer default
 # doc, so the dict .get() lookups (4 per rule per doc) are hoisted to
 # load time.  Same rules, same order.
 _PRESIDIO_T = [(r["pat"], r.get("prefilter"), r.get("validator"),
-                r.get("context"), r["type"], r["score"])
+                r.get("context"), r["type"], r["score"],
+                _anchor_of(r["pat"]))
                for r in _PRESIDIO_RULES]
 
+# the bank and the registry share SSN, IPv4, ISO date and card; AU_ACN and
+# AU_TFN are one pattern
+_SHARED_SCANS = _shared_scans([t[0] for t in _BANK_T + _PRESIDIO_T])
 
-def detect_presidio(text: str) -> list[dict]:
+
+def detect_presidio(text: str, index: Optional[_AnchorIndex] = None
+                    ) -> list[dict]:
     out = []
     tl = text.lower()
-    for pat, pf, validator, ctx_terms, rtype, rscore in _PRESIDIO_T:
+    if index is None:
+        index = _AnchorIndex(text)
+    for pat, pf, validator, ctx_terms, rtype, rscore, anchor in _PRESIDIO_T:
         if ENABLE_PREFILTERS and pf and not any(l in tl for l in pf):
             continue  # necessary literal absent -> the regex cannot hit
-        for m in pat.finditer(text):
-            s, e = m.span()
+        for s, e in index.spans(pat, anchor):
             surface = text[s:e]
             if validator is not None and not validator(surface):
                 continue
@@ -882,22 +1191,26 @@ def _pii_pattern_confidence(name: str, surface: str, text: str,
 
 
 _PII_T = [(p["compiled"], p.get("prefilter"), p["name"], p["type"],
-           p["conf"], p["name"] not in ("age", "zip_code"))
+           p["conf"], p["name"] not in ("age", "zip_code"),
+           _anchor_of(p["compiled"]))
           for p in _COMPILED_PII]
 
 
-def detect_pii_patterns(text: str) -> list[dict]:
+def detect_pii_patterns(text: str, index: Optional[_AnchorIndex] = None
+                        ) -> list[dict]:
     out = []
     text_lower = text.lower()
     prefilters_on = ENABLE_PREFILTERS
-    for compiled, pf, name, ptype, conf, len_gated in _PII_T:
+    if index is None:
+        index = _AnchorIndex(text)
+    for compiled, pf, name, ptype, conf, len_gated, anchor in _PII_T:
         if prefilters_on and pf is not None:
             for lit in pf:
                 if lit in text_lower:
                     break
             else:
                 continue
-        for m in compiled.finditer(text):
+        for m in index.matches(compiled, anchor):
             s, e = m.span()
             surface = m.group()
             if m.groups() and m.group(1):
@@ -925,23 +1238,36 @@ def _is_pii_context(text: str, start: int, end: int) -> bool:
 
 def remove_overlaps_by_score(entities: list[dict]) -> list[dict]:
     """P10 per-model overlap removal: any positional overlap resolved by max
-    score, replace-in-place (pii_specialized_ner.py:373-398)."""
+    score, replace-in-place (pii_specialized_ner.py:373-398).
+
+    The reference rescans every kept entry per entity (O(m^2)).  Entities
+    arrive by start, and every kept entry started at or before the current
+    one, so a non-empty entity overlaps a kept entry exactly when that
+    entry ends after its start.  An entry ending at or before the current
+    start is never hit again, so a pointer past those finds the first
+    overlapping kept entry in amortised O(1)."""
     kept: list[dict] = []
+    live = 0  # kept[:live] all end at or before the current start
     for ent in sorted(entities, key=lambda x: x["start"]):
-        replaced = False
-        for i, ex in enumerate(kept):
-            if ent["start"] < ex["end"] and ent["end"] > ex["start"]:
-                if ent["score"] > ex["score"]:
-                    kept[i] = ent
-                replaced = True
-                break
-        if not replaced:
+        start, end = ent["start"], ent["end"]
+        while live < len(kept) and kept[live]["end"] <= start:
+            live += 1
+        if end > start:
+            hit = live if live < len(kept) else None
+        else:  # an empty span: the reference's test, entry by entry
+            hit = next((i for i in range(live, len(kept))
+                        if start < kept[i]["end"] and end > kept[i]["start"]),
+                       None)
+        if hit is None:
             kept.append(ent)
+        elif ent["score"] > kept[hit]["score"]:
+            kept[hit] = ent
     return sorted(kept, key=lambda x: x["start"])
 
 
 def _run_pii_specialized(text: str,
-                         general_raw: Optional[list[dict]] = None) -> list[dict]:
+                         general_raw: Optional[list[dict]] = None,
+                         index: Optional[_AnchorIndex] = None) -> list[dict]:
     """D9: model pass (mapped via _map_pii_entity_type) + pattern bank,
     then per-model overlap removal.  A dedicated PII model backend
     (set_pii_model_backend) takes precedence over the shared general
@@ -966,7 +1292,7 @@ def _run_pii_specialized(text: str,
         if _is_pii_context(text, ent["start"], ent["end"]):
             ent["score"] = min(1.0, ent["score"] * 1.1)
         results.append(ent)
-    results.extend(detect_pii_patterns(text))
+    results.extend(detect_pii_patterns(text, index))
     return remove_overlaps_by_score(results)
 
 
@@ -976,7 +1302,8 @@ def _run_pii_specialized(text: str,
 # ---------------------------------------------------------------------------
 
 def _model_entities(text: str, model_name: str,
-                    general_raw: Optional[list[dict]] = None) -> list[dict]:
+                    general_raw: Optional[list[dict]] = None,
+                    index: Optional[_AnchorIndex] = None) -> list[dict]:
     if model_name == "general":
         raw = [{**e, "detector": None}
                for e in (general_raw if general_raw is not None
@@ -984,7 +1311,7 @@ def _model_entities(text: str, model_name: str,
     elif model_name == "medical":
         raw = [{**e, "detector": None} for e in _run_medical_model(text)]
     elif model_name == "pii_specialized":
-        raw = _run_pii_specialized(text, general_raw)
+        raw = _run_pii_specialized(text, general_raw, index)
     elif model_name in ("technical", "legal", "financial"):
         from redactify_spark.detect import specialists
         raw = {"technical": specialists.detect_technical,
@@ -1144,9 +1471,10 @@ def detect_document(text: str,
         # pii_specialized stage; run it once per document instead of
         # once per consumer (identical spans either way)
         general_raw = _run_general_model(text)
+    index = _AnchorIndex(text)
     all_entities: list[dict] = []
-    all_entities.extend(detect_presidio(text))
-    all_entities.extend(detect_regex(text))
+    all_entities.extend(detect_presidio(text, index))
+    all_entities.extend(detect_regex(text, index))
     if C.ENGINE_CONFIG["enable_context_detection"]:
         all_entities.extend(detect_contextual(text))
     all_entities.extend(_model_entities(text, "general", general_raw))
@@ -1162,7 +1490,7 @@ def detect_document(text: str,
         all_entities.extend(_model_entities(text, "financial"))
     if C.ENGINE_CONFIG["enable_pii_specialized"]:
         all_entities.extend(_model_entities(text, "pii_specialized",
-                                            general_raw))
+                                            general_raw, index))
     if C.ENGINE_CONFIG["enable_fallback_name_detector"]:
         all_entities.extend(detect_fallback_names(text, all_entities))
     processed = post_process(all_entities, text)

@@ -252,8 +252,9 @@ def test_detection_deterministic():
 # --- prefilter optimization must not change semantics ----------------------
 
 def test_prefilter_equivalence():
-    """A/B the prefiltered and unfiltered regex paths over a diverse corpus
-    (all fixture-style texts + synthetic pages + adversarial literals)."""
+    """A/B the prefiltered and unfiltered regex paths (prefilters, anchored
+    scans, shared scans) over a diverse corpus: fixture-style texts,
+    synthetic pages, adversarial literals and fuzz strings."""
     import duckdb
 
     from redactify_spark.sources.pages import synth_text
@@ -278,6 +279,10 @@ def test_prefilter_equivalence():
         "Order Number: ORD-1 Customer ID: C-2 student roll no: AB123",
         "credit card: **** 1111 2222 3333 4444 CVC: 99",
     ]
+    # anchored scans: Unicode digits, IGNORECASE folds, runs, newlines
+    from tests.test_kernel_anchors import (PII_DENSE, chunk_strings,
+                                           fuzz_strings)
+    corpus += [PII_DENSE] + fuzz_strings(1000) + chunk_strings(1000)
     for text in corpus:
         kernel.ENABLE_PREFILTERS = True
         with_pf = kernel.detect_document(text)
@@ -292,11 +297,13 @@ def test_password_fast_path_equivalence():
     import random
     import re as _re
     raw = _re.compile(r"(?=.*[A-Za-z])(?=.*\d)(?=.*[$#@!%^&*()_+])"
-                      r"[A-Za-z\d$#@!%^&*()_+]{8,}")
+                      r"[A-Za-z\d$#@!%^&*()_+]{8,}", _re.IGNORECASE)
     rng = random.Random(42)
     # '\n' pins the per-line cutoff semantics: the raw pattern's '.*'
-    # lookaheads stop at newlines, so the fast path must too.
-    alphabet = "ab1$ #@!xy2 _+Z9 .\n"
+    # lookaheads stop at newlines, so the fast path must too.  The bank
+    # compiles the rule with IGNORECASE, under which [A-Za-z] also takes
+    # the long s and the Kelvin sign.
+    alphabet = "ab1$ #@!xy2 _+Z9 .\nſK"
     for _ in range(500):
         s = "".join(rng.choice(alphabet)
                     for _ in range(rng.randrange(0, 120)))
