@@ -26,19 +26,16 @@ Cost: every pure optimization of the regex scans sits behind the
 ``ENABLE_PREFILTERS`` switch and gives the plain path's spans exactly.
 Besides literal prefilters, each rule led by ``\\b`` or an optional group
 is tried only at the candidate starts of a per-document index
-(``_AnchorIndex``) instead of at every position, rules that compile to
-the same program scan once per document, the D8 context gate cuts long
-window pieces, and P10 overlap removal is a sweep.  A document's cost
-then grows linearly with its length, also on long runs of the email and
-URL classes (tests/test_kernel_anchors.py).
+(``_AnchorIndex``) instead of at every position, the D8 context gate
+cuts long window pieces, and P10 overlap removal is a sweep.  A
+document's cost then grows linearly with its length, also on long runs
+of the email and URL classes (tests/test_kernel_anchors.py).
 """
 
 from __future__ import annotations
 
 import bisect
 import re
-from collections import Counter
-from re import _compiler as _sre_compiler
 from re import _parser as _sre
 from typing import Iterable, Optional
 
@@ -59,8 +56,7 @@ from redactify_spark import config as C
 #   the previous match's end instead.  That yields exactly finditer's
 #   leftmost non-overlapping matches: every position where a match can
 #   start is a candidate, and `match` still checks `\b` and lookbehind
-#   against the text before s;
-# - one scan per document for rules that compile to the same program.
+#   against the text before s.
 # Equivalence: tests/test_kernel_spans.py::test_prefilter_equivalence and
 # tests/test_kernel_anchors.py.
 ENABLE_PREFILTERS = True
@@ -194,31 +190,16 @@ def _anchor_of(pat: re.Pattern):
     return "sign" if "sign" in common else None
 
 
-def _shared_scans(pats: list[re.Pattern]) -> dict[re.Pattern, tuple]:
-    """A key per rule whose source text repeats: its compiled `re` program.
-    Rules with equal keys find the same spans, so they scan once per
-    document (a digit-only rule compiles alike with and without
-    IGNORECASE)."""
-    repeated = Counter(p.pattern for p in pats)
-    return {p: (p.groups, tuple(_sre_compiler._code(
-                _sre.parse(p.pattern, p.flags), p.flags)))
-            for p in pats if repeated[p.pattern] > 1}
-
-
 class _AnchorIndex:
     """One document's candidate starts, built lazily and shared by every
-    rule that reads them, plus the spans of each rule program scanned so
-    far (the bank and the Presidio registry hold copies of five) and,
-    for the D8 gate, where each context word occurs in the lowered
-    text."""
-    __slots__ = ("text", "_starts", "_reversed", "_spans", "_lower",
-                 "_occurrences")
+    rule that reads them, and, for the D8 gate, where each context word
+    occurs in the lowered text."""
+    __slots__ = ("text", "_starts", "_reversed", "_lower", "_occurrences")
 
     def __init__(self, text: str):
         self.text = text
         self._starts: dict[str, list[int]] = {}
         self._reversed: Optional[str] = None
-        self._spans: dict[object, list[tuple[int, int]]] = {}
         self._lower: Optional[str] = None
         self._occurrences: dict[str, list[int]] = {}
 
@@ -256,17 +237,6 @@ class _AnchorIndex:
         if self._reversed is None:
             self._reversed = text[::-1]
         return _match_at_runs(pat, anchor, text, self._reversed)
-
-    def spans(self, pat: re.Pattern, anchor) -> list[tuple[int, int]]:
-        """The spans of `matches`, scanned once per shared program."""
-        if not ENABLE_PREFILTERS:
-            return [m.span() for m in pat.finditer(self.text)]
-        key = _SHARED_SCANS.get(pat, pat)
-        got = self._spans.get(key)
-        if got is None:
-            got = self._spans[key] = [m.span()
-                                      for m in self.matches(pat, anchor)]
-        return got
 
 
 def _match_at(pat: re.Pattern, starts: list[int], text: str
@@ -501,14 +471,11 @@ _BANK_T = [(d["compiled"], d.get("prefilter"), d.get("context"),
            for d in _COMPILED_BANK]
 
 
-def detect_regex(text: str, index: Optional[_AnchorIndex] = None
-                 ) -> list[dict]:
+def detect_regex(text: str, index: _AnchorIndex) -> list[dict]:
     out = []
     text_lower = text.lower()
     tokens: list[tuple[int, int]] | None = None
     prefilters_on = ENABLE_PREFILTERS
-    if index is None:
-        index = _AnchorIndex(text)
     for compiled, pf, context, ptype, is_pw, anchor in _BANK_T:
         if prefilters_on and pf is not None:
             # any(lit in text_lower for lit in pf), without a genexpr frame
@@ -531,7 +498,8 @@ def detect_regex(text: str, index: Optional[_AnchorIndex] = None
                         "detector": "regex_internal",
                     })
             continue
-        for start, end in index.spans(compiled, anchor):
+        for m in index.matches(compiled, anchor):
+            start, end = m.span()
             matched = text[start:end]
             if len(matched) < 3 and not context:
                 continue
@@ -813,21 +781,15 @@ _PRESIDIO_T = [(r["pat"], r.get("prefilter"), r.get("validator"),
                 _anchor_of(r["pat"]))
                for r in _PRESIDIO_RULES]
 
-# the bank and the registry share SSN, IPv4, ISO date and card; AU_ACN and
-# AU_TFN are one pattern
-_SHARED_SCANS = _shared_scans([t[0] for t in _BANK_T + _PRESIDIO_T])
 
-
-def detect_presidio(text: str, index: Optional[_AnchorIndex] = None
-                    ) -> list[dict]:
+def detect_presidio(text: str, index: _AnchorIndex) -> list[dict]:
     out = []
     tl = text.lower()
-    if index is None:
-        index = _AnchorIndex(text)
     for pat, pf, validator, ctx_terms, rtype, rscore, anchor in _PRESIDIO_T:
         if ENABLE_PREFILTERS and pf and not any(l in tl for l in pf):
             continue  # necessary literal absent -> the regex cannot hit
-        for s, e in index.spans(pat, anchor):
+        for m in index.matches(pat, anchor):
+            s, e = m.span()
             surface = text[s:e]
             if validator is not None and not validator(surface):
                 continue
@@ -1196,13 +1158,10 @@ _PII_T = [(p["compiled"], p.get("prefilter"), p["name"], p["type"],
           for p in _COMPILED_PII]
 
 
-def detect_pii_patterns(text: str, index: Optional[_AnchorIndex] = None
-                        ) -> list[dict]:
+def detect_pii_patterns(text: str, index: _AnchorIndex) -> list[dict]:
     out = []
     text_lower = text.lower()
     prefilters_on = ENABLE_PREFILTERS
-    if index is None:
-        index = _AnchorIndex(text)
     for compiled, pf, name, ptype, conf, len_gated, anchor in _PII_T:
         if prefilters_on and pf is not None:
             for lit in pf:
@@ -1265,9 +1224,9 @@ def remove_overlaps_by_score(entities: list[dict]) -> list[dict]:
     return sorted(kept, key=lambda x: x["start"])
 
 
-def _run_pii_specialized(text: str,
-                         general_raw: Optional[list[dict]] = None,
-                         index: Optional[_AnchorIndex] = None) -> list[dict]:
+def _run_pii_specialized(text: str, index: _AnchorIndex,
+                         general_raw: Optional[list[dict]] = None
+                         ) -> list[dict]:
     """D9: model pass (mapped via _map_pii_entity_type) + pattern bank,
     then per-model overlap removal.  A dedicated PII model backend
     (set_pii_model_backend) takes precedence over the shared general
@@ -1311,7 +1270,7 @@ def _model_entities(text: str, model_name: str,
     elif model_name == "medical":
         raw = [{**e, "detector": None} for e in _run_medical_model(text)]
     elif model_name == "pii_specialized":
-        raw = _run_pii_specialized(text, general_raw, index)
+        raw = _run_pii_specialized(text, index, general_raw)
     elif model_name in ("technical", "legal", "financial"):
         from redactify_spark.detect import specialists
         raw = {"technical": specialists.detect_technical,

@@ -116,9 +116,7 @@ def anonymize_documents(df: DataFrame,
                         ) -> DataFrame:
     """Detection + splice rewrite in a single pass: returns
     (id, anonymized_text, n_entities).  Mirrors POST /anonymize
-    (server/server.py:133-222) incl. the per-type options projection.
-    Like `detect_mentions`, an input with fewer partitions than the
-    session has cores is spread over them first."""
+    (server/server.py:133-222) incl. the per-type options projection."""
     id_field = df.schema[id_col]
     out_schema = T.StructType([
         T.StructField(id_col, id_field.dataType),
@@ -147,9 +145,7 @@ def anonymize_documents(df: DataFrame,
             yield pd.DataFrame({id_col: ids, "anonymized_text": out_text,
                                 "n_entities": n_ents})
 
-    from redactify_spark.operators.partitioning import spread_for_cpu
-    sel = spread_for_cpu(df.select(id_col, text_col), id_col)
-    return sel.mapInPandas(rewrite, schema=out_schema)
+    return df.select(id_col, text_col).mapInPandas(rewrite, schema=out_schema)
 
 
 def mention_contexts(mentions: DataFrame, pages: DataFrame,

@@ -1,5 +1,6 @@
 """Anchored regex scans, the cut context window and the P10 sweep equal
 the plain paths they replace (redactify_spark.detect.kernel)."""
+import gc
 import random
 import time
 
@@ -120,20 +121,6 @@ def test_anchored_matches_equal_finditer_per_rule():
             got = [(m.span(), m.groups())
                    for m in index.matches(pat, anchor)]
             assert got == want, (bank, name, text)
-            assert index.spans(pat, anchor) == [s for s, _ in want], \
-                (bank, name, text)
-
-
-def test_shared_scans_are_the_five_bank_registry_copies():
-    shared = {p.pattern for p in kernel._SHARED_SCANS}
-    assert shared == {
-        r"\b\d{3}-\d{2}-\d{4}\b", r"\b(?:\d{1,3}\.){3}\d{1,3}\b",
-        r"\b\d{4}-\d{2}-\d{2}\b", r"\b(?:\d{4}[- ]?){3}\d{4}\b",
-        r"\b\d{3}\s?\d{3}\s?\d{3}\b"}
-    keys = {}
-    for p, key in kernel._SHARED_SCANS.items():
-        keys.setdefault(p.pattern, set()).add(key)
-    assert all(len(k) == 1 for k in keys.values()), keys
 
 
 def test_cut_context_window_equals_full_window():
@@ -207,21 +194,35 @@ def _adversarial(unit, tail, size):
     return unit * (size // len(unit)) + tail
 
 
-def _best_time(text, repeats):
-    best = float("inf")
-    for _ in range(repeats):
-        t = time.perf_counter()
-        kernel.detect_document(text)
-        best = min(best, time.perf_counter() - t)
-    return best
+def _cpu_per_call(small, large, rounds=5):
+    """The best CPU seconds of detect_document per call on `small` and on
+    `large`, the collector off.  Each round times 16 calls on `small` and
+    one on `large`, so both windows last about as long and a burst of
+    load on the host hits them alike."""
+    best_small = best_large = float("inf")
+    enabled = gc.isenabled()
+    gc.disable()
+    try:
+        for _ in range(rounds):
+            t = time.thread_time()
+            for _ in range(16):
+                kernel.detect_document(small)
+            best_small = min(best_small, (time.thread_time() - t) / 16)
+            t = time.thread_time()
+            kernel.detect_document(large)
+            best_large = min(best_large, time.thread_time() - t)
+    finally:
+        if enabled:
+            gc.enable()
+    return best_small, best_large
 
 
 def test_adversarial_inputs_scale_linearly():
     """Long runs of the email/URL classes, and many overlapping digit
     mentions, used to cost O(n^2): 16x the text must cost at most 20x."""
     for unit, tail in ADVERSARIAL:
-        small = _best_time(_adversarial(unit, tail, 4096), 5)
-        large = _best_time(_adversarial(unit, tail, 65536), 2)
+        small, large = _cpu_per_call(_adversarial(unit, tail, 4096),
+                                     _adversarial(unit, tail, 65536))
         assert large <= 20 * small, (unit, tail, small, large)
 
 

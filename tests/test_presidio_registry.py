@@ -18,9 +18,13 @@ the reference's AnalyzerEngine runs by default
 from redactify_spark.detect import kernel
 
 
+def presidio_spans(text):
+    return kernel.detect_presidio(text, kernel._AnchorIndex(text))
+
+
 def presidio_types(text):
     return {(m["entity_group"], round(m["score"], 2))
-            for m in kernel.detect_presidio(text)}
+            for m in presidio_spans(text)}
 
 
 def doc_types(text):
@@ -90,7 +94,7 @@ def test_passport_context_boost():
     assert ("US_PASSPORT", 0.05) in without  # emitted weak...
     # ...but below the 0.3 pipeline threshold without context
     assert not any(m["entity_group"] == "US_PASSPORT" and m["score"] >= 0.3
-                   for m in kernel.detect_presidio("ref 912803456 logged"))
+                   for m in presidio_spans("ref 912803456 logged"))
 
 
 def test_driver_license_context_boost():
@@ -110,10 +114,8 @@ def test_bank_number_context_boost():
 def test_au_recognizers_checksums():
     """AU ABN/ACN/TFN/Medicare: published real-world-valid examples hit
     at 1.0; a flipped digit kills the checksum (dropped, not rescored)."""
-    from redactify_spark.detect.kernel import detect_presidio
-
     def hits(text, etype):
-        return [e for e in detect_presidio(text)
+        return [e for e in presidio_spans(text)
                 if e["entity_group"] == etype]
 
     # ATO's published example ABN
@@ -130,10 +132,8 @@ def test_au_recognizers_checksums():
 
 
 def test_sg_nric_and_in_recognizers():
-    from redactify_spark.detect.kernel import detect_presidio
-
     def hits(text, etype):
-        return [e for e in detect_presidio(text)
+        return [e for e in presidio_spans(text)
                 if e["entity_group"] == etype]
 
     # series-correct checksum letters (S/T tables differ by +4 offset)

@@ -75,25 +75,6 @@ def test_anonymize_documents_stage(spark, pages_df):
         assert "@" not in r.anonymized_text or "[EMAIL_ADDRESS-" in r.anonymized_text
 
 
-def test_anonymize_documents_spreads_a_small_input(spark, pages_df):
-    """A one-partition documents table runs on more than one core, as in
-    detect_mentions, with the rows of the in-process kernel."""
-    from pyspark.sql import functions as F
-
-    from redactify_spark.detect import anonymize as A
-    out = anonymize_documents(pages_df.coalesce(1), id_col="url",
-                              text_col="text").cache()
-    assert out.select(F.spark_partition_id()).distinct().count() > 1
-    got = {r.url: (r.anonymized_text, r.n_entities) for r in out.collect()}
-    out.unpersist()
-    assert len(got) == N
-    for i in range(N):
-        text = P.synth_text(i)
-        ms = kernel.detect_document(text)
-        assert got[P.page_url(i)] == (
-            A.anonymize_text(text, ms, "pseudonymize", True), len(ms))
-
-
 def test_unicode_and_null_texts_through_udtf(spark):
     """Non-ASCII text and null/empty rows must flow through the Arrow
     UDTF without error, with character offsets identical to the pure

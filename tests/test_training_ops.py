@@ -691,7 +691,7 @@ def test_pii_hf_backend_loader_wiring_with_stub(monkeypatch):
         assert kernel._PII_MODEL_BACKEND is not None
 
         text = "employee id number XK-42-FOO on file"
-        out = kernel._run_pii_specialized(text)
+        out = kernel._run_pii_specialized(text, kernel._AnchorIndex(text))
         hits = [e for e in out
                 if text[e["start"]:e["end"]] == "XK-42-FOO"
                 and e.get("detector") == "pii_specialized_ner_model"]
@@ -703,8 +703,9 @@ def test_pii_hf_backend_loader_wiring_with_stub(monkeypatch):
         # precedence: general_raw passed in is IGNORED when the
         # dedicated backend is registered (reference runs its own model)
         out2 = kernel._run_pii_specialized(
-            text, general_raw=[{"entity_group": "ORG", "start": 0,
-                                "end": 8, "score": 0.99, "word": "employee"}])
+            text, kernel._AnchorIndex(text),
+            general_raw=[{"entity_group": "ORG", "start": 0,
+                          "end": 8, "score": 0.99, "word": "employee"}])
         assert not [e for e in out2 if e.get("original_label") == "ORG"]
     finally:
         kernel.set_pii_model_backend(None)
