@@ -235,8 +235,7 @@ def run_full_dag(spark, sf_dir: str, mult: int, root: str,
     stage_walls = {
         s: CP.read_manifest(root, s)["wall_time_sec"]
         for s in ("01_mentions", "02_triples", "03_match_edges",
-                  "04_canonical", "05_nodes", "06_edges",
-                  "07_salience")}
+                  "04_canonical", "05_nodes", "06_edges")}
     return {"sec": round(elapsed, 3), "n_docs": n_docs,
             "n_triples": n_triples, "n_nodes": n_nodes, "n_edges": n_edges,
             "docs_per_sec": round(n_docs / elapsed, 1),

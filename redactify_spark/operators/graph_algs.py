@@ -102,7 +102,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     all ranks starting at 1.0 (GraphX convention; dangling nodes hold
     the base term).  Unweighted by default (w=1, W=outdeg); pass
     `weight` to distribute each node's rank proportionally to edge
-    weights (co-mention counts in the KG salience stage).  Fixed
+    weights (co-mention counts for the KG's node salience).  Fixed
     iteration count keeps the result deterministic and the oracle
     unrollable; convergence-driven stopping is a trivial wrapper
     (iterate until max |delta| < eps).
@@ -116,19 +116,20 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     weighted edges over 2*10^5 nodes took 15 s end to end and peaked at
     270 MiB in that worker (local[3], 4-core VM).
 
-    `assume_distinct=True` skips the defensive edge dedup when the
-    caller guarantees (src, dst) rows are already unique (e.g. the
-    output of symmetrize()) -- one full shuffle of the edge table
-    saved, identical result."""
+    `assume_distinct=True` skips the defensive edge dedup (unweighted)
+    or the per-pair weight sum (weighted) when the caller guarantees
+    (src, dst) rows are already unique (e.g. the output of symmetrize())
+    -- one full shuffle of the edge table saved, identical result."""
     if weight is None:
         e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         if not assume_distinct:
             e = e.distinct()
         e = e.withColumn("_ew", F.lit(1.0))
     else:
-        e = (edges.groupBy(F.col(src).alias("src"),
-                           F.col(dst).alias("dst"))
-             .agg(F.sum(weight).cast("double").alias("_ew")))
+        e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"),
+                         F.col(weight).cast("double").alias("_ew"))
+        if not assume_distinct:
+            e = e.groupBy("src", "dst").agg(F.sum("_ew").alias("_ew"))
     # lazy cut: the component labelling and the join below both read
     # the edges, which are prepared once
     e = e.localCheckpoint(eager=False)

@@ -193,9 +193,9 @@ def invalidate(root: str, stage: str) -> None:
 def kg_pipeline(spark: SparkSession, pages: DataFrame, root: str,
                 id_col: str = "url") -> dict[str, DataFrame]:
     """pages -> mentions -> triples, then `build_graph` over the
-    mentions, each stage checkpointed under `root`.  Kill the process
-    after any stage: rerunning resumes from the last complete stage
-    (verified in tests/test_checkpoint.py)."""
+    mentions: six stages, each checkpointed under `root`.  Kill the
+    process after any stage: rerunning resumes from the last complete
+    stage (verified in tests/test_checkpoint.py)."""
     from redactify_spark.operators.detection import detect_mentions
     from redactify_spark.operators.triples import all_triples
 
@@ -210,10 +210,11 @@ def kg_pipeline(spark: SparkSession, pages: DataFrame, root: str,
 
 def build_graph(spark: SparkSession, root: str, mentions: DataFrame,
                 id_col: str = "url") -> dict[str, DataFrame]:
-    """mentions -> link edges -> canon -> nodes/edges -> salience, each
-    stage checkpointed under `root`.  The one graph-build path:
+    """mentions -> link edges -> canon -> edges -> nodes with salience,
+    each stage checkpointed under `root`.  The one graph-build path:
     kg_pipeline and the recrawl refresh both run it, so every KG is
-    built by the same stages."""
+    built by the same stages.  Salience is stored once, on the node
+    row; the returned `salience` is an unstored projection of it."""
     from redactify_spark.operators.components import canonical_map
     from redactify_spark.operators.graph import (build_edges_from_canon,
                                                  build_nodes_from_canon)
@@ -227,32 +228,37 @@ def build_graph(spark: SparkSession, root: str, mentions: DataFrame,
     # are stored stages, and while one fits the broadcast threshold the
     # planner joins them inside 05 and 06 with no shuffle
     cmention = mentions.join(canon, "pseudo_key")
-    nodes = run_stage(spark, root, "05_nodes",
-                      lambda: build_nodes_from_canon(cmention,
-                                                     id_col=id_col))
+    # edges first: the node stage ranks the stored edges
     edges = run_stage(spark, root, "06_edges",
                       lambda: build_edges_from_canon(cmention,
                                                      id_col=id_col))
-    salience = run_stage(spark, root, "07_salience",
-                         lambda: _entity_salience(nodes, edges))
-    return {"match_edges": medges, "canonical": canon,
-            "nodes": nodes, "edges": edges, "salience": salience}
+    nodes = run_stage(spark, root, "05_nodes", lambda: _entity_salience(
+        build_nodes_from_canon(cmention, id_col=id_col), edges))
+    return {"match_edges": medges, "canonical": canon, "nodes": nodes,
+            "edges": edges, "salience": nodes.select(
+                "canon_id", "type", "n_mentions", "n_docs", "salience")}
 
 
 def _entity_salience(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """Entity salience: weighted PageRank over the symmetrized co-mention
-    /contact graph (edge weight = distinct supporting documents), joined
-    back onto the node table.  Nodes outside any edge keep the PageRank
-    base term (1 - damping) -- they were mentioned but never co-mentioned."""
+    """The node table with its salience: weighted PageRank over the
+    symmetrized co-mention/contact graph (edge weight = distinct
+    supporting documents), left-joined onto the nodes.  Nodes outside
+    any edge keep the PageRank base term (1 - damping) -- they were
+    mentioned but never co-mentioned."""
     from redactify_spark.operators.graph_algs import pagerank
+    # the union of both directions is already distinct, so neither a
+    # dedup here nor pagerank's per-pair sum is needed: edges run from
+    # ENTITY_TYPES_FOR_CONTACT canon ids to CONTACT_TYPES canon ids,
+    # linking joins only same-type keys so a canon id keeps its type,
+    # and pred is the constant has_contact -- so (src, dst) is unique
+    # and no reversed edge can collide with a forward one
     sym = (edges.select("src", "dst", "weight")
            .unionByName(edges.select(F.col("dst").alias("src"),
-                                     F.col("src").alias("dst"), "weight"))
-           .groupBy("src", "dst").agg(F.max("weight").alias("weight")))
-    ranks = pagerank(sym, weight="weight", iterations=5)
+                                     F.col("src").alias("dst"), "weight")))
+    ranks = pagerank(sym, weight="weight", iterations=5, assume_distinct=True)
     return (nodes.join(ranks.withColumnRenamed("node", "canon_id"),
                        "canon_id", "left")
-            .select("canon_id", "type", "n_mentions", "n_docs",
+            .select(*nodes.columns,
                     F.round(F.coalesce("rank", F.lit(0.15)), 6)
                     .alias("salience")))
 

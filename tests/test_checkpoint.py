@@ -70,7 +70,7 @@ def test_kill_resume_equivalence(spark, root):
 
     # crash after 02_triples: drop downstream checkpoints
     for stage in ("03_match_edges", "04_canonical", "05_nodes",
-                  "06_edges", "07_salience"):
+                  "06_edges"):
         CP.invalidate(root, stage)
 
     resumed = CP.kg_pipeline(spark, pages, root, id_col="url")
@@ -81,19 +81,56 @@ def test_kill_resume_equivalence(spark, root):
 
     # manifests intact for all stages
     for stage in ("01_mentions", "02_triples", "03_match_edges",
-                  "04_canonical", "05_nodes", "06_edges",
-                  "07_salience"):
+                  "04_canonical", "05_nodes", "06_edges"):
         assert CP.stage_complete(root, stage)
 
     # salience semantics: co-mentioned entities rise above the PageRank
     # base term; never-co-mentioned nodes sit exactly at it
-    sal = {r.canon_id: r.salience for r in resumed["salience"].collect()}
+    sal = {r.canon_id: r.salience for r in resumed["nodes"].collect()}
     edge_nodes = {r.src for r in resumed["edges"].collect()} | \
                  {r.dst for r in resumed["edges"].collect()}
     assert sal, "salience table empty"
     for cid, s in sal.items():
         if cid not in edge_nodes:
             assert s == 0.15
+
+
+def test_node_salience_matches_separate_stage_formula(spark, root):
+    """Salience lives on the node row.  Oracle: the formula of the former
+    separate salience stage -- symmetrize the stored edges with a
+    groupBy-max over (src, dst), weighted PageRank, left-join onto the
+    nodes -- applied to the stored edges and the node columns."""
+    from pyspark.sql import functions as F
+
+    from redactify_spark.operators.graph_algs import pagerank
+
+    pages = synth_pages(spark, 48, partitions=4).localCheckpoint()
+    out = CP.kg_pipeline(spark, pages, root, id_col="url")
+    nodes, edges = out["nodes"], out["edges"]
+    assert nodes.columns == ["canon_id", "type", "surface_forms",
+                             "n_mentions", "n_docs", "salience"]
+    assert not os.path.exists(os.path.join(root, "07_salience"))
+
+    sym = (edges.select("src", "dst", "weight")
+           .unionByName(edges.select(F.col("dst").alias("src"),
+                                     F.col("src").alias("dst"), "weight"))
+           .groupBy("src", "dst").agg(F.max("weight").alias("weight")))
+    ranks = pagerank(sym, weight="weight", iterations=5)
+    oracle = (nodes.drop("salience")
+              .join(ranks.withColumnRenamed("node", "canon_id"),
+                    "canon_id", "left")
+              .select("canon_id",
+                      F.round(F.coalesce("rank", F.lit(0.15)), 6)
+                      .alias("salience")))
+    want = {r.canon_id: r.salience for r in oracle.collect()}
+    got = {r.canon_id: r.salience for r in nodes.collect()}
+    assert got == want
+    assert any(v > 0.15 for v in got.values())
+
+    sal = out["salience"]
+    assert sal.columns == ["canon_id", "type", "n_mentions", "n_docs",
+                           "salience"]
+    assert table_set(sal) == table_set(nodes, sal.columns)
 
 
 def test_content_hash_partition_invariant(spark):
@@ -108,7 +145,7 @@ def test_pipeline_report_covers_all_stages(spark, root):
     rep = CP.pipeline_report(spark, root)
     stages = {r.stage for r in rep.collect()}
     assert {"01_mentions", "02_triples", "03_match_edges", "04_canonical",
-            "05_nodes", "06_edges", "07_salience"} == stages
+            "05_nodes", "06_edges"} == stages
     rows = rep.collect()
     assert all(r.row_count >= 0 and r.wall_time_sec > 0
                and r.n_partitions >= 1 for r in rows)

@@ -117,6 +117,10 @@ def test_pagerank_weighted_matches_reference(spark):
                                  iterations=5).collect()}
     for n, v in r.items():
         assert out[n] == pytest.approx(v, abs=1e-12)
+    # distinct (src, dst) rows: skipping the per-pair sum changes nothing
+    assert {row.node: row.rank
+            for row in G.pagerank(e, weight="weight", iterations=5,
+                                  assume_distinct=True).collect()} == out
     # weighted != unweighted on this fixture (weight actually matters)
     unw = {row.node: row.rank
            for row in G.pagerank(e, iterations=5).collect()}

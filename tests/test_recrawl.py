@@ -91,7 +91,7 @@ def test_live_triples_and_graph_equal_oneshot(applied, spark):
     assert _collect(got["triples"]) == _collect(all_triples(m, "url"))
     me = match_edges(m)
     cm = m.join(canonical_map(m, me), "pseudo_key")
-    assert _collect(got["nodes"]) == _collect(
+    assert _collect(got["nodes"].drop("salience")) == _collect(
         build_nodes_from_canon(cm, id_col="url"))
     assert _collect(got["edges"]) == _collect(
         build_edges_from_canon(cm, id_col="url"))
