@@ -699,18 +699,6 @@ EMB_BANDS = 8            # signature bands (candidate = ANY band matches)
 EMB_PLANES_PER_BAND = 8  # hyperplanes per band (256-bucket band space)
 
 
-def adaptive_emb_planes_per_band(n_vectors: int,
-                                 target_bucket: int = 32) -> int:
-    """Planes per band sized so band buckets average ~target_bucket
-    vectors (band space 2^planes ~ n/target).  Too few planes on a big
-    corpus saturates every bucket past the width cap (recall -> 0);
-    too many on a small corpus shatters true pairs across buckets."""
-    import math
-    return max(4, min(24,
-                      int(math.ceil(math.log2(
-                          max(n_vectors, 1) / target_bucket + 1)))))
-
-
 def embedding_dup_pairs(embeddings: DataFrame, threshold: float = 0.95,
                         vec_col: str = "embedding",
                         id_col: str = "vec_id",
@@ -740,8 +728,8 @@ def embedding_dup_pairs(embeddings: DataFrame, threshold: float = 0.95,
     2^planes_per_band buckets, so with the 8-plane default (256
     buckets) any corpus much beyond ~10^4 rows makes EVERY bucket
     wider than the cap and recall collapses to zero -- measured at
-    10^6 rows in BENCH r3.  Use adaptive_emb_planes_per_band(n) (~
-    log2(n / target_bucket)) when the corpus size is known."""
+    10^6 rows in BENCH r3.  Pass planes_per_band ~ log2(n / 32) when
+    the corpus size is known."""
     from redactify_spark.operators.similarity import (_hyperplanes,
                                                       _norm_expr,
                                                       signature_expr)

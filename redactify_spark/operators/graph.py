@@ -22,9 +22,8 @@ from pyspark.sql.window import Window
 TOP_K_SURFACES = 16
 
 
-def build_nodes_from_canon(m: DataFrame, id_col: str = "doc_id",
-                           top_k_surfaces: int = TOP_K_SURFACES
-                           ) -> DataFrame:
+def build_nodes_from_canon(m: DataFrame,
+                           id_col: str = "doc_id") -> DataFrame:
     """nodes(canon_id, type, surface_forms, n_mentions, n_docs) over
     PRE-canonicalized mentions (canon_id already joined on).
     plans/checkpoint.build_graph passes the unstored join of the
@@ -60,7 +59,7 @@ def build_nodes_from_canon(m: DataFrame, id_col: str = "doc_id",
                   .groupBy("canon_id", "entity_group")
                   .agg(F.transform(
                            F.sort_array(F.collect_list(
-                               F.when(F.col("_rk") <= top_k_surfaces,
+                               F.when(F.col("_rk") <= TOP_K_SURFACES,
                                       F.struct("_rk", "surface")))),
                            lambda s: s["surface"]).alias("surface_forms"),
                        F.sum("n_surface").alias("n_mentions")))

@@ -190,12 +190,10 @@ def match_edges(mentions: DataFrame, threshold: float = 0.55) -> DataFrame:
     Only name-like types (LINKABLE_TYPES) fuzzy-link: identifier types
     (emails, phones, SSNs) are identity-keyed -- two different
     addresses are different entities no matter how string-similar.
-    Key-only inputs (no entity_group column) link every key.
     """
-    ents = mentions
-    if "entity_group" in mentions.columns:
-        ents = ents.where(F.col("entity_group").isin(*LINKABLE_TYPES))
-    ents = ents.select("pseudo_key", "surface").dropDuplicates(["pseudo_key"])
+    ents = (mentions.where(F.col("entity_group").isin(*LINKABLE_TYPES))
+            .select("pseudo_key", "surface")
+            .dropDuplicates(["pseudo_key"]))
     pairs = candidate_pairs(surface_bands(ents)).where(
         F.split(F.col("key_a"), "-").getItem(0)
         == F.split(F.col("key_b"), "-").getItem(0))

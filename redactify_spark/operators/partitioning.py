@@ -24,12 +24,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def spread_for_cpu(df: DataFrame, *key_cols: str,
-                   factor: int = 1) -> DataFrame:
-    """Hash-repartition `df` by `key_cols` to factor*defaultParallelism
-    iff it currently has fewer partitions than that (scale-adaptive:
-    no-op on well-partitioned inputs)."""
-    target = df.sparkSession.sparkContext.defaultParallelism * max(1, factor)
+def spread_for_cpu(df: DataFrame, *key_cols: str) -> DataFrame:
+    """Hash-repartition `df` by `key_cols` to defaultParallelism iff it
+    currently has fewer partitions than that (scale-adaptive: no-op on
+    well-partitioned inputs)."""
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         current = df.rdd.getNumPartitions()
     except Exception:  # planning edge (e.g. streaming frame): leave as-is

@@ -299,16 +299,3 @@ def quantize_embeddings(embeddings: DataFrame,
                                        + 0.5).cast("int"))
     return staged.select("vec_id", qvec.alias("qvec"),
                          F.col("_scale").alias("scale"))
-
-
-def quantized_topk(quantized: DataFrame, qvec_q: list[int],
-                   k: int = 10) -> DataFrame:
-    """Exact cosine top-k over int8-quantized vectors (int arithmetic in
-    the dot product, scale cancels).  `qvec_q` is the already-quantized
-    query."""
-    return (quantized
-            .select("vec_id",
-                    cosine_expr(F.col("qvec"), [float(x) for x in qvec_q])
-                    .alias("cos"))
-            .orderBy(F.col("cos").desc(), F.col("vec_id"))
-            .limit(k))

@@ -48,9 +48,10 @@ def mention_like(spark):
     rows = []
     i = 0
     for a, b, _ in LINK_CASES:
-        rows.append((f"[ORGANIZATION-k{i}]", a)); i += 1
-        rows.append((f"[ORGANIZATION-k{i}]", b)); i += 1
-    return spark.createDataFrame(rows, "pseudo_key string, surface string")
+        rows.append((f"[ORGANIZATION-k{i}]", a, "ORGANIZATION")); i += 1
+        rows.append((f"[ORGANIZATION-k{i}]", b, "ORGANIZATION")); i += 1
+    return spark.createDataFrame(
+        rows, "pseudo_key string, surface string, entity_group string")
 
 
 def test_match_edges_fixtures(spark, mention_like):

@@ -499,8 +499,8 @@ def test_quantized_recall_vs_float(spark, embeddings):
     qt = S.quantize_embeddings(embeddings)
     qrow = qt.where("vec_id = 7").first()
     approx = [r.vec_id
-              for r in S.quantized_topk(qt, list(qrow.qvec),
-                                        k=10).collect()]
+              for r in S.brute_force_topk(qt, list(qrow.qvec), k=10,
+                                          vec_col="qvec").collect()]
     recall = len(set(exact) & set(approx)) / 10
     assert recall >= 0.9, (recall, exact, approx)
 
@@ -745,17 +745,6 @@ def test_ann_stored_index_matches_inline(spark):
                             centroids=cents, cell_col="cell").collect()
     assert [(r.vec_id, round(r.cos, 9)) for r in inline_ivf] \
         == [(r.vec_id, round(r.cos, 9)) for r in stored_ivf]
-
-
-def test_adaptive_emb_planes_per_band_sizing():
-    """Band space must scale with corpus size: the 8-plane default
-    saturates every bucket past the cap at ~10^6 rows (recall -> 0,
-    measured in BENCH r3)."""
-    from redactify_spark.operators.dedup import adaptive_emb_planes_per_band
-    assert adaptive_emb_planes_per_band(1_000_000) == 15
-    assert adaptive_emb_planes_per_band(20_000) == 10
-    assert adaptive_emb_planes_per_band(0) == 4          # floor
-    assert adaptive_emb_planes_per_band(10**12) == 24    # ceiling
 
 
 def test_bm25_hand_fixture(spark):
