@@ -126,12 +126,28 @@ def _components(uv: DataFrame, cut) -> DataFrame:
                     .alias("component")))
 
 
+def merged_keys(edges: DataFrame) -> DataFrame:
+    """(pseudo_key, canon_id) for the keys a match edge merges into a
+    smaller key's component: the rows of `connected_components` with
+    node != component.  Every other key is its own canon id, so this is
+    all a canonical map needs to store."""
+    comp = connected_components(edges)
+    return (comp.where(F.col("node") != F.col("component"))
+            .select(F.col("node").alias("pseudo_key"),
+                    F.col("component").alias("canon_id")))
+
+
+def canonicalize(df: DataFrame, merged: DataFrame) -> DataFrame:
+    """`df` with a `canon_id` column: its `pseudo_key`'s entry in
+    `merged`, else the key itself.  A left join plus coalesce, so it is
+    exact for any (pseudo_key, canon_id) map that covers the merged
+    keys, a full map with identity rows included."""
+    return (df.join(merged, "pseudo_key", "left")
+            .withColumn("canon_id", F.coalesce("canon_id", "pseudo_key")))
+
+
 def canonical_map(mentions: DataFrame, edges: DataFrame) -> DataFrame:
     """(pseudo_key, canon_id): every mention key mapped to its component
     representative; singletons map to themselves."""
-    comp = connected_components(edges)
-    keys = mentions.select("pseudo_key").distinct()
-    return (keys.join(comp.withColumnRenamed("node", "pseudo_key"),
-                      "pseudo_key", "left")
-            .select("pseudo_key",
-                    F.coalesce("component", "pseudo_key").alias("canon_id")))
+    return canonicalize(mentions.select("pseudo_key").distinct(),
+                        merged_keys(edges))

@@ -3,10 +3,12 @@
 North-rule requirement: every stage checkpoints so the job resumes
 mid-pipeline, with per-partition lineage and counters.  Model:
 
-  stage table   <root>/<stage>/data/          (parquet; Iceberg on a real
-                                               cluster -- same API shape)
+  stage table   <root>/<stage>/data/          (zstd parquet; Iceberg on a
+                                               real cluster -- same API
+                                               shape and codec)
   manifest      <root>/<stage>/_manifest.json (row_count, content_hash,
-                                               schema, wall_time, conf)
+                                               schema, wall_time, bytes,
+                                               per-file row counts)
 
 `run_stage(root, name, builder)` is the unit: if the stage's manifest
 exists and is complete, the stage is SKIPPED and its table is read back
@@ -34,6 +36,8 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from redactify_spark.sources.io import PARQUET_CODEC
 
 
 def _manifest_path(root: str, stage: str) -> str:
@@ -66,7 +70,7 @@ def content_hash(df: DataFrame) -> int:
 
 def _rel_file_key(uri: str, base: str) -> str:
     """input_file_name() URI -> path RELATIVE to the stage data dir --
-    the same key _parquet_footer_counts uses, so lineage dicts stay
+    the same key _parquet_footers uses, so lineage dicts stay
     comparable and a partitioned (subdir) layout cannot collapse
     colliding part-00000 basenames into one entry."""
     p = uri
@@ -97,13 +101,14 @@ def stage_manifest_stats(spark: SparkSession, path: str) -> dict:
                            for r in rows}}
 
 
-def _parquet_footer_counts(path: str) -> dict[str, int]:
-    """Per-file row counts from parquet FOOTER metadata -- a pure
-    metadata read (no data scan), the local-FS analogue of reading an
-    Iceberg manifest.  This is where per-partition lineage should come
-    from at any scale: the write already recorded the counts."""
+def _parquet_footers(path: str) -> tuple[dict[str, int], int]:
+    """(per-file row counts, total file bytes) from parquet FOOTER
+    metadata and file sizes -- a pure metadata read (no data scan), the
+    local-FS analogue of reading an Iceberg manifest.  This is where
+    per-partition lineage should come from at any scale: the write
+    already recorded the counts."""
     import pyarrow.parquet as pq
-    out = {}
+    counts, size = {}, 0
     for dp, _, fs in os.walk(path):
         for f in sorted(fs):
             if f.endswith(".parquet"):
@@ -111,9 +116,10 @@ def _parquet_footer_counts(path: str) -> dict[str, int]:
                 # key by path RELATIVE to the stage data dir, so a
                 # partitioned (subdir) layout can't collapse colliding
                 # part-00000 basenames into one entry
-                out[os.path.relpath(full, path)] = \
+                counts[os.path.relpath(full, path)] = \
                     pq.ParquetFile(full).metadata.num_rows
-    return out
+                size += os.path.getsize(full)
+    return counts, size
 
 
 def stage_complete(root: str, stage: str) -> bool:
@@ -152,12 +158,20 @@ def run_stage(spark: SparkSession, root: str, stage: str,
                     _hash_sum(df).alias("s"))
     tmp = data + "_tmp"
     shutil.rmtree(tmp, ignore_errors=True)
-    df.write.mode("overwrite").parquet(tmp)
+    # the hash is over values, so the codec does not change it, and
+    # roots written with another codec still resume and union
+    (df.write.mode("overwrite").option("compression", PARQUET_CODEC)
+     .parquet(tmp))
     shutil.rmtree(data, ignore_errors=True)
     os.replace(tmp, data)
 
     m = obs.get
-    persisted = spark.read.parquet(data)
+    # the written schema, not inference: inferring runs a Spark job
+    # per stage.  A file read makes every field nullable either way
+    persisted = spark.read.schema(df.schema).parquet(data)
+    # per-partition lineage from parquet footers: metadata-only,
+    # no data rescan (Iceberg-manifest analogue)
+    partitions, size = _parquet_footers(data)
     manifest = {
         "stage": stage,
         "status": "complete",
@@ -165,9 +179,8 @@ def run_stage(spark: SparkSession, root: str, stage: str,
         "wall_time_sec": round(time.time() - t0, 3),
         "row_count": int(m["n"]),
         "content_hash": _fold(m["s"]),
-        # per-partition lineage from parquet footers: metadata-only,
-        # no data rescan (Iceberg-manifest analogue)
-        "partitions": _parquet_footer_counts(data),
+        "bytes": size,
+        "partitions": partitions,
     }
     mp = _manifest_path(root, stage)
     with open(mp + ".tmp", "w") as f:
@@ -210,33 +223,44 @@ def kg_pipeline(spark: SparkSession, pages: DataFrame, root: str,
 
 def build_graph(spark: SparkSession, root: str, mentions: DataFrame,
                 id_col: str = "url") -> dict[str, DataFrame]:
-    """mentions -> link edges -> canon -> edges -> nodes with salience,
-    each stage checkpointed under `root`.  The one graph-build path:
-    kg_pipeline and the recrawl refresh both run it, so every KG is
-    built by the same stages.  Salience is stored once, on the node
-    row; the returned `salience` is an unstored projection of it."""
-    from redactify_spark.operators.components import canonical_map
+    """mentions -> link edges -> merged keys -> edges -> nodes with
+    salience, each stage checkpointed under `root`.  The one graph-build
+    path: kg_pipeline and the recrawl refresh both run it, so every KG
+    is built by the same stages.  The returned `canonical` (the full
+    key -> canon id map) and `salience` (a projection of the node rows)
+    are unstored views."""
+    from redactify_spark.operators.components import (canonicalize,
+                                                      merged_keys)
     from redactify_spark.operators.graph import (build_edges_from_canon,
                                                  build_nodes_from_canon)
     from redactify_spark.operators.linking import match_edges
 
     medges = run_stage(spark, root, "03_match_edges",
                        lambda: match_edges(mentions))
-    canon = run_stage(spark, root, "04_canonical",
-                      lambda: canonical_map(mentions, medges))
-    # canonicalized mentions are joined on read, not stored: both sides
-    # are stored stages, and while one fits the broadcast threshold the
-    # planner joins them inside 05 and 06 with no shuffle
-    cmention = mentions.join(canon, "pseudo_key")
+    # only the merged keys are stored (276 of 5,615 keys on the kg_build
+    # benchmark input); a singleton's canon id is its own key
+    merged = run_stage(spark, root, "04_canonical",
+                       lambda: merged_keys(medges))
+    # canonicalized mentions are joined on read, not stored: the left
+    # join can broadcast only the merged keys, and while they fit the
+    # broadcast threshold the planner joins them inside 05 and 06 with
+    # no shuffle
+    cmention = canonicalize(mentions, merged)
     # edges first: the node stage ranks the stored edges
     edges = run_stage(spark, root, "06_edges",
                       lambda: build_edges_from_canon(cmention,
                                                      id_col=id_col))
+    # sorted within partitions so the stored bytes do not depend on
+    # which join side adaptive execution broadcast (no Exchange added)
     nodes = run_stage(spark, root, "05_nodes", lambda: _entity_salience(
-        build_nodes_from_canon(cmention, id_col=id_col), edges))
-    return {"match_edges": medges, "canonical": canon, "nodes": nodes,
-            "edges": edges, "salience": nodes.select(
-                "canon_id", "type", "n_mentions", "n_docs", "salience")}
+        build_nodes_from_canon(cmention, id_col=id_col), edges)
+        .sortWithinPartitions("canon_id"))
+    return {"match_edges": medges,
+            "canonical": canonicalize(mentions.select("pseudo_key")
+                                      .distinct(), merged),
+            "nodes": nodes, "edges": edges,
+            "salience": nodes.select("canon_id", "type", "n_mentions",
+                                     "n_docs", "salience")}
 
 
 def _entity_salience(nodes: DataFrame, edges: DataFrame) -> DataFrame:
@@ -266,7 +290,9 @@ def _entity_salience(nodes: DataFrame, edges: DataFrame) -> DataFrame:
 def pipeline_report(spark: SparkSession, root: str) -> DataFrame:
     """All stage manifests under `root` as one DataFrame -- the
     monitoring/lineage view of a pipeline run (stage, rows, wall, hash,
-    per-file lineage count).  Reads only the tiny manifest JSONs."""
+    per-file lineage count, stored bytes; -1 where a manifest written
+    before bytes were recorded has none).  Reads only the tiny manifest
+    JSONs."""
     import glob
 
     rows = []
@@ -279,7 +305,9 @@ def pipeline_report(spark: SparkSession, root: str) -> DataFrame:
                      int(m.get("row_count", -1)),
                      float(m.get("wall_time_sec", -1.0)),
                      str(m.get("content_hash", "")),
-                     len(m.get("partitions", {}))))
+                     len(m.get("partitions", {})),
+                     int(m.get("bytes", -1))))
     return spark.createDataFrame(
         rows, "path string, stage string, row_count long, "
-              "wall_time_sec double, content_hash string, n_partitions long")
+              "wall_time_sec double, content_hash string, n_partitions long, "
+              "bytes long")

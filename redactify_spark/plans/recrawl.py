@@ -10,7 +10,8 @@ are new.  At 10^12 pages, re-running mention detection over an
 unchanged page is the single largest avoidable cost in the whole
 system, so this module maintains the KG across full-crawl snapshots
 with ONE stored state table per snapshot, `state/<t>/ownership`:
-(url, owner, digest, simhash, alive, status), ~49 bytes/url.
+(url, owner, digest, simhash, alive, status), ~28 bytes/url
+stored (zstd).
 
 - `owner` is the tranche whose detection output is current and `alive`
   the liveness, so the live mention set is a join away, and `removed`

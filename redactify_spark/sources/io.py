@@ -12,6 +12,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+# the codec of the checkpoint stage tables and of `write_table` and
+# `compact_table` (so a compaction does not re-inflate a stage): zstd,
+# Iceberg's default.  The [TYPE-<hex>] key columns that fill most stage
+# tables store in about 63% of snappy's bytes, and parquet readers take
+# any codec per file, so tables written with another codec still read
+# and union
+PARQUET_CODEC = "zstd"
+
 
 def iceberg_available(spark: SparkSession) -> bool:
     try:
@@ -30,7 +38,8 @@ def write_table(df: DataFrame, target: str, mode: str = "overwrite",
 
     On Iceberg: `writeTo(...).partitionedBy(bucket(n, col))` (identity
     partition on `partition_col` when given).
-    On parquet: `partitionBy(partition_col)` produces the hive-style
+    On parquet (`PARQUET_CODEC`, as the checkpoint stage tables):
+    `partitionBy(partition_col)` produces the hive-style
     directory layout whose scans get real PartitionFilters pruning
     (plan-asserted in tests/test_bucketing.py); `bucket_col` repartitions
     by a hash of the column so downstream equi-joins on it read
@@ -53,7 +62,7 @@ def write_table(df: DataFrame, target: str, mode: str = "overwrite",
         from pyspark.sql.functions import col, pmod, xxhash64
         df = df.repartition(n_buckets,
                             pmod(xxhash64(col(bucket_col)), n_buckets))
-    w = df.write.mode(mode)
+    w = df.write.mode(mode).option("compression", PARQUET_CODEC)
     if partition_col:
         w = w.partitionBy(partition_col)
     w.parquet(target)
@@ -129,7 +138,8 @@ def compact_table(spark: SparkSession, path: str,
     n_out = max(1, math.ceil(total / target_file_bytes))
     df = spark.read.parquet(path)
     tmp = path.rstrip("/") + "__compact_tmp"
-    df.repartition(n_out).write.mode("overwrite").parquet(tmp)
+    (df.repartition(n_out).write.mode("overwrite")
+     .option("compression", PARQUET_CODEC).parquet(tmp))
     shutil.rmtree(trash, ignore_errors=True)
     os.rename(path, trash)
     os.rename(tmp, path)

@@ -149,6 +149,12 @@ def test_pipeline_report_covers_all_stages(spark, root):
     rows = rep.collect()
     assert all(r.row_count >= 0 and r.wall_time_sec > 0
                and r.n_partitions >= 1 for r in rows)
+    for r in rows:
+        data = os.path.join(root, r.path, "data")
+        assert r.bytes == sum(
+            os.path.getsize(os.path.join(dp, f))
+            for dp, _, fs in os.walk(data) for f in fs
+            if f.endswith(".parquet")) > 0
 
 
 def test_audit_pipeline_tool(spark, tmp_path):
@@ -197,7 +203,7 @@ def test_audit_lineage_keys_match_manifest_on_partitioned_layout(
      .repartition(1)
      .write.partitionBy("part").parquet(path))
 
-    footer = CP._parquet_footer_counts(path)
+    footer, _ = CP._parquet_footers(path)
     stats = CP.stage_manifest_stats(spark, path)
     # three subdirs, one file each -> basenames WOULD collide; relative
     # keys must not
@@ -205,3 +211,107 @@ def test_audit_lineage_keys_match_manifest_on_partitioned_layout(
     assert set(stats["partitions"]) == set(footer)
     assert stats["partitions"] == footer
     assert stats["row_count"] == 200
+
+
+KG_STAGES = ("01_mentions", "02_triples", "03_match_edges", "04_canonical",
+             "05_nodes", "06_edges")
+
+
+@pytest.fixture(scope="module")
+def kg_built(spark, tmp_path_factory):
+    """(root, pages, kg_pipeline output) of one cold build over
+    synthetic pages."""
+    root = str(tmp_path_factory.mktemp("kg") / "ckpt")
+    pages = synth_pages(spark, 48, partitions=4).localCheckpoint()
+    return root, pages, CP.kg_pipeline(spark, pages, root, id_col="url")
+
+
+def _data(root, stage):
+    return os.path.join(root, stage, "data")
+
+
+def test_canonical_stage_stores_only_merged_keys(spark, kg_built):
+    """04_canonical holds exactly the non-identity rows of the full
+    map, and the returned `canonical` is that full map."""
+    from redactify_spark.operators.components import canonical_map
+    from redactify_spark.operators.linking import match_edges
+
+    root, _, out = kg_built
+    full = table_set(canonical_map(out["mentions"],
+                                   match_edges(out["mentions"])))
+    assert table_set(out["canonical"]) == full
+    assert out["canonical"].columns == ["pseudo_key", "canon_id"]
+    merged = {(k, c) for k, c in full if k != c}
+    assert merged, "synthetic pages should merge some keys"
+    stored = spark.read.parquet(_data(root, "04_canonical"))
+    assert table_set(stored, ["pseudo_key", "canon_id"]) == merged
+    assert stored.count() == len(merged)
+
+
+def test_stage_tables_are_zstd(kg_built):
+    import pyarrow.parquet as pq
+
+    root, _, _ = kg_built
+    for stage in KG_STAGES:
+        codecs = set()
+        for dp, _, fs in os.walk(_data(root, stage)):
+            for f in fs:
+                if f.endswith(".parquet"):
+                    md = pq.ParquetFile(os.path.join(dp, f)).metadata
+                    codecs |= {md.row_group(g).column(c).compression
+                               for g in range(md.num_row_groups)
+                               for c in range(md.num_columns)}
+        assert codecs == {"ZSTD"}, (stage, codecs)
+
+
+def test_read_back_schema_equals_inferred(spark, kg_built):
+    """run_stage reads a stage back with its written schema instead of
+    inferring it; the two must agree, nullability included."""
+    root, _, out = kg_built
+    returned = {"01_mentions": out["mentions"], "02_triples": out["triples"],
+                "03_match_edges": out["match_edges"], "05_nodes": out["nodes"],
+                "06_edges": out["edges"]}
+    for stage in KG_STAGES:
+        inferred = spark.read.parquet(_data(root, stage)).schema
+        if stage in returned:
+            assert returned[stage].schema == inferred, stage
+        assert CP.read_manifest(root, stage)["schema"] == \
+            inferred.simpleString(), stage
+
+
+def test_resume_over_full_snappy_canonical_map(spark, kg_built, tmp_path):
+    """A root whose 04_canonical holds a full map (identity rows
+    included) written with snappy, as roots written before the stage
+    held only merged keys do, resumes into the same nodes and edges;
+    the audit tool verifies the mixed-codec root."""
+    import subprocess
+    import sys
+
+    from redactify_spark.operators.components import canonical_map
+
+    src, pages, out = kg_built
+    root = str(tmp_path / "mixed")
+    shutil.copytree(src, root)
+    full = canonical_map(out["mentions"], out["match_edges"])
+    CP.invalidate(root, "04_canonical")
+    full.write.option("compression", "snappy").parquet(
+        _data(root, "04_canonical"))
+    stats = CP.stage_manifest_stats(spark, _data(root, "04_canonical"))
+    with open(os.path.join(root, "04_canonical", "_manifest.json"), "w") as f:
+        json.dump({"stage": "04_canonical", "status": "complete", **stats}, f)
+    assert stats["row_count"] > spark.read.parquet(
+        _data(src, "04_canonical")).count()
+    for stage in ("05_nodes", "06_edges"):
+        CP.invalidate(root, stage)
+
+    resumed = CP.kg_pipeline(spark, pages, root, id_col="url")
+    assert table_set(resumed["nodes"]) == table_set(out["nodes"])
+    assert table_set(resumed["edges"]) == table_set(out["edges"])
+    assert table_set(resumed["canonical"]) == table_set(out["canonical"])
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run([sys.executable, f"{repo}/tools/audit_pipeline.py",
+                        root, "--master", "local[2]"],
+                       capture_output=True, text=True, timeout=300)
+    assert r.returncode == 0, r.stdout + r.stderr
+    assert r.stdout.count("OK") == len(KG_STAGES)
