@@ -672,7 +672,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from redactify_spark.operators.detection import anonymize_documents
         pages = _pages_from_documents(spark, sf)
         return (anonymize_documents(pages, id_col="doc_id", text_col="text",
-                                    strategy="mask", preserve_format=True)
+                                    strategy="mask")
                 .select("doc_id", "n_entities", "anonymized_text")
                 .orderBy("doc_id").limit(100))
 

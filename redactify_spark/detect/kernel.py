@@ -35,11 +35,14 @@ of the email and URL classes (tests/test_kernel_anchors.py).
 from __future__ import annotations
 
 import bisect
+import logging
 import re
 from re import _parser as _sre
 from typing import Iterable, Optional
 
 from redactify_spark import config as C
+
+_log = logging.getLogger(__name__)
 
 # ---------------------------------------------------------------------------
 # Pattern compilation (once per process / Spark python worker)
@@ -879,8 +882,8 @@ def detect_fallback_names(text: str, existing: list[dict]) -> list[dict]:
 # (server/models/general_ner.py:41-125, medical_ner.py).  transformers is
 # not installed here, so the default engine is a deterministic gazetteer
 # NER with the same output contract (entity_group/start/end/score/word).
-# A real model can be plugged in via `set_ner_backend` -- the Spark stage
-# loads it once per executor python worker (mirrors
+# A real model can be plugged in via `set_ner_batch_backend` -- the Spark
+# stage loads it once per executor python worker (mirrors
 # server/model_manager.py's per-process lazy singleton).
 # ---------------------------------------------------------------------------
 
@@ -921,23 +924,19 @@ def _gazetteer_ner(text: str) -> list[dict]:
     return out
 
 
-_NER_BACKEND = None        # optional plug-in: Callable[[str], list[dict]]
 _NER_BATCH_BACKEND = None  # optional: Callable[[list[str]], list[list[dict]]]
-
-
-def set_ner_backend(fn) -> None:
-    global _NER_BACKEND
-    _NER_BACKEND = fn
 
 
 def set_ner_batch_backend(fn) -> None:
     """Register a BATCHED general-NER backend (one call per Arrow batch
     of texts -- the shape transformer inference wants: the HF pipeline
     amortizes tokenization + forward passes across the whole list).
-    The Spark detection stage calls `general_raw_batch` once per pandas
-    batch and threads the per-text results through detect_document, so
-    model inference is batch-vectorized while the regex/post-processing
-    kernel stays per-document."""
+    Both Spark detection stages run `detect_batch`, which calls
+    `general_raw_batch` once per pandas batch and threads the per-text
+    results through detect_document, so model inference is
+    batch-vectorized while the regex/post-processing kernel stays
+    per-document.  A lone detect_document call reaches the backend as a
+    batch of one."""
     global _NER_BATCH_BACKEND
     _NER_BATCH_BACKEND = fn
 
@@ -972,15 +971,11 @@ def try_load_hf_backend(model_name: str =
     nlp = pipeline("ner", model=model_name, aggregation_strategy="simple",
                    device=-1)
 
-    def backend(text: str) -> list[dict]:
-        return _conv_hf(nlp(text))
-
     def batch_backend(texts: list[str]) -> list[list[dict]]:
         # HF pipelines accept a list: tokenization + forward passes are
         # batched across the whole Arrow batch (the north-star shape)
         return [_conv_hf(items) for items in nlp(list(texts), batch_size=32)]
 
-    set_ner_backend(backend)
     set_ner_batch_backend(batch_backend)
     return True
 
@@ -1009,7 +1004,9 @@ def _validate_general(text: str, raw: list[dict]) -> list[dict]:
 
 
 def _run_general_model(text: str) -> list[dict]:
-    return _validate_general(text, (_NER_BACKEND or _gazetteer_ner)(text))
+    if _NER_BATCH_BACKEND is None:
+        return _validate_general(text, _gazetteer_ner(text))
+    return general_raw_batch([text])[0]
 
 
 _MEDICAL_TERM_RE = re.compile(
@@ -1225,18 +1222,15 @@ def remove_overlaps_by_score(entities: list[dict]) -> list[dict]:
 
 
 def _run_pii_specialized(text: str, index: _AnchorIndex,
-                         general_raw: Optional[list[dict]] = None
-                         ) -> list[dict]:
+                         general_raw: list[dict]) -> list[dict]:
     """D9: model pass (mapped via _map_pii_entity_type) + pattern bank,
     then per-model overlap removal.  A dedicated PII model backend
     (set_pii_model_backend) takes precedence over the shared general
     spans, mirroring the reference's separate pipeline instance."""
     if _PII_MODEL_BACKEND is not None:
         model_spans = _validate_general(text, _PII_MODEL_BACKEND(text))
-    elif general_raw is not None:
-        model_spans = general_raw
     else:
-        model_spans = _run_general_model(text)
+        model_spans = general_raw
     results = []
     for e in model_spans:
         label = e["entity_group"].upper().strip()
@@ -1264,9 +1258,7 @@ def _model_entities(text: str, model_name: str,
                     general_raw: Optional[list[dict]] = None,
                     index: Optional[_AnchorIndex] = None) -> list[dict]:
     if model_name == "general":
-        raw = [{**e, "detector": None}
-               for e in (general_raw if general_raw is not None
-                         else _run_general_model(text))]
+        raw = [{**e, "detector": None} for e in general_raw]
     elif model_name == "medical":
         raw = [{**e, "detector": None} for e in _run_medical_model(text)]
     elif model_name == "pii_specialized":
@@ -1408,7 +1400,7 @@ def detect_document(text: str,
     document.  Detector order pinned (see module docstring).
 
     `general_raw`: pre-computed (validated) general-NER spans for this
-    text, supplied by the Spark stage when a BATCHED backend is
+    text, supplied by `detect_batch` when a BATCHED backend is
     registered (set_ner_batch_backend) -- model inference then runs once
     per Arrow batch instead of once per document.
 
@@ -1459,19 +1451,20 @@ def detect_document(text: str,
     return apply_options(processed, options)
 
 
-def detect_batch(texts: Iterable[str],
-                 options: Optional[dict[str, bool]] = None) -> list[list[dict]]:
-    """Batch variant; per-text failures degrade to an empty mention list
-    (mirrors server/detection_engine.py:202-207).  Uses the batched NER
-    backend for the whole list when one is registered."""
+def detect_batch(texts: Iterable[str]) -> list[list[dict]]:
+    """Batch variant, the per-batch driver of both Spark detection
+    stages; a per-text failure degrades to an empty mention list with a
+    logged warning (mirrors server/detection_engine.py:202-207).  Uses
+    the batched NER backend for the whole list when one is registered."""
     texts = [t or "" for t in texts]
     batch_raw = general_raw_batch(texts)
     out = []
     for i, t in enumerate(texts):
         try:
             out.append(detect_document(
-                t, options,
-                general_raw=batch_raw[i] if batch_raw else None))
-        except Exception:
+                t, general_raw=batch_raw[i] if batch_raw else None))
+        except Exception as exc:
+            _log.warning("detect_batch: document %d of the batch degraded "
+                         "to no mentions: %r", i, exc)
             out.append([])
     return out

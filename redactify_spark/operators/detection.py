@@ -6,19 +6,21 @@ whole detector union runs INSIDE one ``mapInPandas`` pass: one scan of
 the input, Arrow-batched into pandas, each batch expanded to mention
 rows by the pure kernel (redactify_spark.detect.kernel).  No per-row
 Python at the Spark level, no RPC tier, no second scan -- per-document
-"concurrency" is partition parallelism.
+"concurrency" is partition parallelism.  Both stages here run
+``kernel.detect_batch`` on each batch, so a document whose detection
+raises gets no mentions instead of failing the task.
 
 Output mention schema (SURVEY.md §1.3):
   <id col>, entity_group, start, end, score, detector, surface, pseudo_key
-where pseudo_key = '[TYPE-' || md5(surface)[:6] || ']' -- the reference's
-A1 pseudonym (server/anonymization_engine.py:229-242), reused as the
-stable join key for linking/canonicalization.
+where pseudo_key = '[TYPE-' || md5(surface) || ']' -- the reference's
+A1 pseudonym (server/anonymization_engine.py:229-242) with the full
+hash, the stable join key for linking/canonicalization.
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator, Optional
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -52,7 +54,6 @@ def _pseudo_key(surface: str, etype: str) -> str:
 def detect_mentions(df: DataFrame,
                     id_col: str = "doc_id",
                     text_col: str = "text",
-                    options: Optional[dict[str, bool]] = None,
                     max_text_len: int | None = None) -> DataFrame:
     """Run the full reference detector chain over ``df[text_col]``.
 
@@ -71,28 +72,22 @@ def detect_mentions(df: DataFrame,
     out_schema = T.StructType(
         [T.StructField(id_col, df.schema[id_col].dataType)]
         + MENTION_FIELDS)
-    captured_options = dict(options) if options else None
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # import inside the task so the worker compiles patterns once
         from redactify_spark.detect import kernel
 
         for pdf in batches:
-            rows = [t or "" for t in pdf[text_col].tolist()]
+            rows = pdf[text_col].tolist()
             if max_text_len is not None:
-                rows = [t[:max_text_len] for t in rows]
-            ids = pdf[id_col].tolist()
+                rows = [(t or "")[:max_text_len] for t in rows]
             rec: dict[str, list] = {f.name: [] for f in out_schema.fields}
-            # when a batched NER backend is registered (transformer
-            # inference), run it ONCE for the whole Arrow batch
-            batch_raw = kernel.general_raw_batch(rows)
-            for i, text in enumerate(rows):
-                for m in kernel.detect_document(
-                        text, captured_options,
-                        general_raw=batch_raw[i] if batch_raw else None):
+            for doc_id, ms in zip(pdf[id_col].tolist(),
+                                  kernel.detect_batch(rows)):
+                for m in ms:
                     surface = m.get("entity_text", "")
                     etype = m["entity_group"]
-                    rec[id_col].append(ids[i])
+                    rec[id_col].append(doc_id)
                     rec["entity_group"].append(etype)
                     rec["start"].append(m["start"])
                     rec["end"].append(m["end"])
@@ -110,40 +105,30 @@ def detect_mentions(df: DataFrame,
 def anonymize_documents(df: DataFrame,
                         id_col: str = "doc_id",
                         text_col: str = "text",
-                        strategy: str = "pseudonymize",
-                        preserve_format: bool = True,
-                        options: Optional[dict[str, bool]] = None
-                        ) -> DataFrame:
+                        strategy: str = "pseudonymize") -> DataFrame:
     """Detection + splice rewrite in a single pass: returns
     (id, anonymized_text, n_entities).  Mirrors POST /anonymize
-    (server/server.py:133-222) incl. the per-type options projection."""
+    (server/server.py:133-222) with every entity type on and the
+    reference's default preserve_format=True."""
     id_field = df.schema[id_col]
     out_schema = T.StructType([
         T.StructField(id_col, id_field.dataType),
         T.StructField("anonymized_text", T.StringType()),
         T.StructField("n_entities", T.IntegerType()),
     ])
-    captured_options = dict(options) if options else None
 
     def rewrite(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from redactify_spark.detect import anonymize as anon
         from redactify_spark.detect import kernel
 
         for pdf in batches:
-            ids, out_text, n_ents = [], [], []
             texts = [t or "" for t in pdf[text_col].tolist()]
-            batch_raw = kernel.general_raw_batch(texts)
-            for i, (doc_id, text) in enumerate(zip(pdf[id_col].tolist(),
-                                                   texts)):
-                ms = kernel.detect_document(
-                    text, captured_options,
-                    general_raw=batch_raw[i] if batch_raw else None)
-                ids.append(doc_id)
-                out_text.append(anon.anonymize_text(text or "", ms, strategy,
-                                                    preserve_format))
-                n_ents.append(len(ms))
-            yield pd.DataFrame({id_col: ids, "anonymized_text": out_text,
-                                "n_entities": n_ents})
+            found = kernel.detect_batch(texts)
+            yield pd.DataFrame({
+                id_col: pdf[id_col].tolist(),
+                "anonymized_text": anon.anonymize_batch(texts, found,
+                                                        strategy),
+                "n_entities": [len(ms) for ms in found]})
 
     return df.select(id_col, text_col).mapInPandas(rewrite, schema=out_schema)
 

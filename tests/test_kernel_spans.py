@@ -249,6 +249,34 @@ def test_detection_deterministic():
     assert a == b
 
 
+# --- per-document fault isolation (detection_engine.py:202-207)
+
+def test_detect_batch_degrades_a_failing_document(monkeypatch, caplog):
+    """A document whose detection raises gets no mentions, with one
+    warning naming its batch index; its neighbours keep their spans.
+    Both Spark detection stages run detect_batch, so this is their
+    rule too."""
+    texts = ["email x.y@corp.example.com now", "POISON marker",
+             "call 555-867-5309 today"]
+    expected = [kernel.detect_document(t) for t in texts]
+    real = kernel.detect_document
+
+    def flaky(text, *args, **kw):
+        if "POISON" in text:
+            raise RuntimeError("kernel bug")
+        return real(text, *args, **kw)
+
+    monkeypatch.setattr(kernel, "detect_document", flaky)
+    with caplog.at_level("WARNING", logger=kernel.__name__):
+        got = kernel.detect_batch(texts)
+    assert got == [expected[0], [], expected[2]]
+    assert expected[0] and expected[2]
+    warned = [r.getMessage() for r in caplog.records
+              if r.levelname == "WARNING"]
+    assert len(warned) == 1
+    assert "document 1" in warned[0] and "kernel bug" in warned[0]
+
+
 # --- prefilter optimization must not change semantics ----------------------
 
 def test_prefilter_equivalence():

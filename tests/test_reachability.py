@@ -19,7 +19,6 @@ ALLOWED = {
     "files_pruned_fraction": "measures what zorder_write prunes",
     "try_load_pii_hf_backend": "OPERATIONS: optional transformer NER backend",
     "try_load_medical_hf_backend": "OPERATIONS: optional medical NER backend",
-    "anonymize_batch": "the reference's batch anonymize entry point (A15)",
     "export_merges_file": "writes the BPE merges that load_merges_file reads",
     "bucketed_join": "called by the spark-submit job test_submit ships",
     "plan_has_exchange": "called by the spark-submit job test_submit ships",

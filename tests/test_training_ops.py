@@ -332,7 +332,6 @@ def test_hf_backend_gate():
     # transformers absent in this container -> gate returns False and the
     # deterministic gazetteer stays active
     assert kernel.try_load_hf_backend() is False
-    assert kernel._NER_BACKEND is None
     assert kernel._NER_BATCH_BACKEND is None
 
 
@@ -583,7 +582,6 @@ def test_hf_backend_loader_wiring_with_stub_transformers(monkeypatch):
         assert kernel.try_load_hf_backend("my/model") is True
         assert built == {"task": "ner", "model": "my/model",
                          "aggregation_strategy": "simple", "device": -1}
-        assert kernel._NER_BACKEND is not None
         assert kernel._NER_BATCH_BACKEND is not None
 
         text = "we visited Zanzibar Corp yesterday"
@@ -602,7 +600,6 @@ def test_hf_backend_loader_wiring_with_stub_transformers(monkeypatch):
         assert per_batch[0][0]["start"] == hits[0]["start"]
         assert per_batch[1] == []
     finally:
-        kernel.set_ner_backend(None)
         kernel.set_ner_batch_backend(None)
 
 
@@ -691,7 +688,8 @@ def test_pii_hf_backend_loader_wiring_with_stub(monkeypatch):
         assert kernel._PII_MODEL_BACKEND is not None
 
         text = "employee id number XK-42-FOO on file"
-        out = kernel._run_pii_specialized(text, kernel._AnchorIndex(text))
+        out = kernel._run_pii_specialized(text, kernel._AnchorIndex(text),
+                                          general_raw=[])
         hits = [e for e in out
                 if text[e["start"]:e["end"]] == "XK-42-FOO"
                 and e.get("detector") == "pii_specialized_ner_model"]
