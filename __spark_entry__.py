@@ -885,10 +885,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from redactify_spark.operators import graph_algs as G
         li = _t(spark, sf, "lineitem")
         cooc = G.cooccurrence_edges(li, "l_orderkey", "l_partkey")
-        # symmetrize() output is dropDuplicates'd -> skip pagerank's
-        # defensive re-dedup (one full edge shuffle; identical result)
-        ranks = G.pagerank(G.symmetrize(cooc, assume_oriented=True),
-                           iterations=5, assume_distinct=True)
+        # cooccurrence_edges is distinct and oriented (src < dst): no
+        # re-dedup, and pagerank adds each edge's reverse itself
+        ranks = G.pagerank(cooc, iterations=5, assume_distinct=True,
+                           undirected=True)
         return (ranks.select(F.col("node").cast("long").alias("node"),
                              F.round("rank", 6).alias("rank"))
                 .orderBy("node"))

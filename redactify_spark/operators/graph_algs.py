@@ -96,7 +96,8 @@ def symmetrize(edges: DataFrame, src: str = "src",
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
              iterations: int = 5, damping: float = 0.85,
              weight: str | None = None,
-             assume_distinct: bool = False) -> DataFrame:
+             assume_distinct: bool = False,
+             undirected: bool = False) -> DataFrame:
     """(node, rank) after `iterations` rounds of
     rank(v) = (1-d) + d * sum_{u->v} rank(u) * w(u,v) / W(u),
     all ranks starting at 1.0 (GraphX convention; dangling nodes hold
@@ -119,7 +120,15 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     `assume_distinct=True` skips the defensive edge dedup (unweighted)
     or the per-pair weight sum (weighted) when the caller guarantees
     (src, dst) rows are already unique (e.g. the output of symmetrize())
-    -- one full shuffle of the edge table saved, identical result."""
+    -- one full shuffle of the edge table saved, identical result.
+
+    `undirected=True` reads each row as one undirected edge: the ranks
+    equal those of `symmetrize(edges, assume_oriented=True)` (weight
+    kept on both directions), but the reverse direction is added in
+    numpy inside the rank pass, so the component labelling and the
+    shuffle see half the rows.  The caller guarantees that no edge
+    appears in both orientations, the guarantee `assume_oriented`
+    asks for (e.g. cooccurrence_edges output, src < dst)."""
     if weight is None:
         e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         if not assume_distinct:
@@ -141,13 +150,15 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                                F.col("component").alias("_cc")), "src")
             .repartition(n_shuffle, "_cc")
             .select("src", "dst", "_ew")
-            .mapInPandas(functools.partial(_rank_pass, iterations, damping),
+            .mapInPandas(functools.partial(_rank_pass, iterations, damping,
+                                           undirected),
                          f"node {node_type}, rank double"))
 
 
-def _rank_pass(iterations: int, damping: float, batches):
+def _rank_pass(iterations: int, damping: float, undirected: bool, batches):
     """mapInPandas body: the fixed PageRank rounds over one partition's
-    weighted edges (whole components only) -> (node, rank)."""
+    weighted edges (whole components only) -> (node, rank).  With
+    `undirected`, every edge also runs in reverse with the same weight."""
     frames = list(batches)
     if not frames:
         return
@@ -158,6 +169,9 @@ def _rank_pass(iterations: int, damping: float, batches):
         return_inverse=True)
     s, t = idx[:m], idx[m:]
     w = e["_ew"].to_numpy(dtype=np.float64)
+    if undirected:
+        s, t, w = (np.concatenate([s, t]), np.concatenate([t, s]),
+                   np.concatenate([w, w]))
     # w(u,v) / W(u), fixed across rounds
     share = w / np.bincount(s, weights=w, minlength=len(nodes))[s]
     rank = np.ones(len(nodes))

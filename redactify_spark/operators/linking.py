@@ -1,4 +1,4 @@
-"""Entity linking: MinHash-LSH candidate blocking + vectorized scorer.
+"""Entity linking: MinHash-LSH candidate blocking + exact Jaccard verify.
 
 The reference has no entity linking (each request is independent); the
 north_star mandates it for the KG build: near-duplicate surface forms
@@ -8,23 +8,31 @@ merge them.  Design (SURVEY.md §4.2):
   distinct surfaces -> normalize -> char-2-gram shingles
     -> k MinHash values (numpy, vectorized per Arrow batch)
     -> b bands of r rows; band signature = hash of the band's slice
-    -> candidate pairs = self-equi-join on (band_id, band_sig)
-    -> exact Jaccard over shingle sets (pandas UDF) -> edges >= threshold
+    -> repartition on (band, sig): every bucket lands whole in one
+       partition
+    -> one mapInPandas pass per partition expands each bucket's
+       same-type pairs and keeps those whose exact Jaccard over the
+       shingle sets reaches the threshold
+    -> one dedup over the surviving edges (a pair sharing several
+       bands is found in each shared bucket)
 
 Scale notes:
-- The LSH join is an equi-join on the band signature: Catalyst plans a
-  shuffle hash join keyed by (band, sig) -- no cross product anywhere.
+- No self-join and no cross product: each bucket is expanded in
+  memory where it lives, and only scored edges reach the last shuffle.
+  The bound is one partition's band rows, which sit in one Python
+  worker at a time (as in components._local_pass).
 - Hot buckets (stopword-like surfaces landing thousands of entities in
   one bucket) would go quadratic in the pair expansion; we cap bucket
   width (MAX_BUCKET default 64) and surface the number of dropped
-  buckets as a metric instead of silently exploding. AQE skew-join
-  handles residual imbalance.
+  buckets as a metric (`wide_bucket_count`) instead of silently
+  exploding.
 - All hashing is seed-free deterministic (md5/crc of content), so the
   match graph is identical across partitionings and cluster sizes.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import re
 import struct
@@ -127,10 +135,12 @@ def surface_bands(entities: DataFrame) -> DataFrame:
 
 def candidate_pairs(bands: DataFrame,
                     max_bucket: int = MAX_BUCKET) -> DataFrame:
-    """Equi-join each LSH bucket with itself (key1 < key2).
+    """Equi-join each LSH bucket with itself (key1 < key2): the distinct
+    candidate pairs of the buckets no wider than max_bucket.
 
-    Buckets wider than max_bucket are dropped (logged via the returned
-    metric column is not practical here; use `wide_bucket_count` below).
+    `match_edges` does not run it; it is the reference for candidate
+    counting, which the benchmark's linking counters and the tests use.
+    Dropped buckets are counted by `wide_bucket_count` below.
     """
     sized = bands.withColumn(
         "bucket_n", F.count("*").over(Window.partitionBy("band", "sig")))
@@ -154,29 +164,46 @@ def wide_bucket_count(bands: DataFrame,
             .where(F.col("count") > max_bucket).count())
 
 
-_SCORED_SCHEMA = T.StructType([
+_EDGES_SCHEMA = T.StructType([
     T.StructField("key_a", T.StringType()),
     T.StructField("key_b", T.StringType()),
     T.StructField("jaccard", T.DoubleType()),
 ])
 
 
-def score_pairs(pairs: DataFrame) -> DataFrame:
-    """Exact shingle-Jaccard similarity, vectorized per Arrow batch."""
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ka, kb, js = [], [], []
-            for a, b, na, nb in zip(pdf["key_a"], pdf["key_b"],
-                                    pdf["norm_a"], pdf["norm_b"]):
-                sa, sb = shingles(na), shingles(nb)
+def _bucket_pass(threshold: float, max_bucket: int,
+                 batches: Iterator[pd.DataFrame]
+                 ) -> Iterator[pd.DataFrame]:
+    """mapInPandas body: one partition's band rows (whole buckets) ->
+    the (key_a < key_b) same-type pairs of its buckets of 2 to
+    max_bucket members with exact shingle Jaccard >= threshold, each
+    pair once per partition.  A norm's shingle set is computed once per
+    partition, a pair's Jaccard once."""
+    buckets: dict[tuple[int, int], list[tuple[str, str]]] = {}
+    for pdf in batches:
+        for key, norm, band, sig in zip(
+                pdf["pseudo_key"].tolist(), pdf["norm"].tolist(),
+                pdf["band"].tolist(), pdf["sig"].tolist()):
+            buckets.setdefault((band, sig), []).append((key, norm))
+    shingled = functools.lru_cache(maxsize=None)(shingles)
+    scored: dict[tuple[str, str], float] = {}
+    for members in buckets.values():
+        # the width counts every member, whatever its type
+        if not 2 <= len(members) <= max_bucket:
+            continue
+        members = sorted(m for m in members if m[0] is not None)
+        for i, (a, na) in enumerate(members):
+            ta = a.split("-")[0]
+            for b, nb in members[i + 1:]:
+                if (a, b) in scored or b.split("-")[0] != ta:
+                    continue
+                sa, sb = shingled(na), shingled(nb)
                 inter = len(sa & sb)
-                j = inter / (len(sa) + len(sb) - inter) if inter else 0.0
-                ka.append(a)
-                kb.append(b)
-                js.append(j)
-            yield pd.DataFrame({"key_a": ka, "key_b": kb, "jaccard": js})
-
-    return pairs.mapInPandas(score, schema=_SCORED_SCHEMA)
+                scored[(a, b)] = (inter / (len(sa) + len(sb) - inter)
+                                  if inter else 0.0)
+    edges = [(a, b, j) for (a, b), j in scored.items() if j >= threshold]
+    if edges:
+        yield pd.DataFrame(edges, columns=["key_a", "key_b", "jaccard"])
 
 
 LINKABLE_TYPES = ("PERSON", "ORGANIZATION", "LOCATION")
@@ -190,14 +217,24 @@ def match_edges(mentions: DataFrame, threshold: float = 0.55) -> DataFrame:
     Only name-like types (LINKABLE_TYPES) fuzzy-link: identifier types
     (emails, phones, SSNs) are identity-keyed -- two different
     addresses are different entities no matter how string-similar.
+
+    One bucket pass (`_bucket_pass`): the band rows are hash-partitioned
+    on (band, sig) and each partition expands and scores its buckets in
+    one mapInPandas call, so the only other shuffle is the dedup of the
+    surviving edges.  Bound: all of one partition's band rows (16 per
+    linkable entity) sit in one Python worker.  The result equals
+    `candidate_pairs` filtered to same-type pairs, scored and cut at
+    `threshold` (pinned in tests/test_linking_components.py).
     """
     ents = (mentions.where(F.col("entity_group").isin(*LINKABLE_TYPES))
             .select("pseudo_key", "surface")
             .dropDuplicates(["pseudo_key"]))
-    pairs = candidate_pairs(surface_bands(ents)).where(
-        F.split(F.col("key_a"), "-").getItem(0)
-        == F.split(F.col("key_b"), "-").getItem(0))
-    return score_pairs(pairs).where(F.col("jaccard") >= threshold)
+    return (surface_bands(ents)
+            .repartition("band", "sig")
+            .mapInPandas(functools.partial(_bucket_pass, threshold,
+                                           MAX_BUCKET),
+                         schema=_EDGES_SCHEMA)
+            .dropDuplicates(["key_a", "key_b"]))
 
 
 def blocked_levenshtein_pairs(df: DataFrame, col: str,

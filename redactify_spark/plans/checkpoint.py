@@ -265,21 +265,19 @@ def build_graph(spark: SparkSession, root: str, mentions: DataFrame,
 
 def _entity_salience(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """The node table with its salience: weighted PageRank over the
-    symmetrized co-mention/contact graph (edge weight = distinct
+    undirected co-mention/contact graph (edge weight = distinct
     supporting documents), left-joined onto the nodes.  Nodes outside
     any edge keep the PageRank base term (1 - damping) -- they were
     mentioned but never co-mentioned."""
     from redactify_spark.operators.graph_algs import pagerank
-    # the union of both directions is already distinct, so neither a
-    # dedup here nor pagerank's per-pair sum is needed: edges run from
-    # ENTITY_TYPES_FOR_CONTACT canon ids to CONTACT_TYPES canon ids,
-    # linking joins only same-type keys so a canon id keeps its type,
-    # and pred is the constant has_contact -- so (src, dst) is unique
-    # and no reversed edge can collide with a forward one
-    sym = (edges.select("src", "dst", "weight")
-           .unionByName(edges.select(F.col("dst").alias("src"),
-                                     F.col("src").alias("dst"), "weight")))
-    ranks = pagerank(sym, weight="weight", iterations=5, assume_distinct=True)
+    # each stored edge is one undirected edge, so pagerank adds the
+    # reverse direction itself, and neither a dedup nor its per-pair sum
+    # is needed: edges run from ENTITY_TYPES_FOR_CONTACT canon ids to
+    # CONTACT_TYPES canon ids, linking joins only same-type keys so a
+    # canon id keeps its type, and pred is the constant has_contact --
+    # so (src, dst) is unique and no edge is stored in both orientations
+    ranks = pagerank(edges.select("src", "dst", "weight"), weight="weight",
+                     iterations=5, assume_distinct=True, undirected=True)
     return (nodes.join(ranks.withColumnRenamed("node", "canon_id"),
                        "canon_id", "left")
             .select(*nodes.columns,

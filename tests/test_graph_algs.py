@@ -177,6 +177,29 @@ def test_pagerank_components_strings_partitions(spark):
     for n, v in expected.items():
         assert out[n] == pytest.approx(v, abs=1e-12), n
 
+    # undirected=True reads each row as one undirected edge: the same
+    # ranks as over both directions, weighted and unweighted, with the
+    # component labelling spread over 4 partitions
+    oriented = [("acme", "bolt", 3.0), ("acme", "cog", 1.0),
+                ("cog", "bolt", 2.0), ("acme", "dud", 4.0),
+                ("xeno", "yak", 2.0), ("pim", "quo", 1.0),
+                ("quo", "rho", 5.0)]
+    o = (spark.createDataFrame(oriented,
+                               "src string, dst string, weight double")
+         .repartition(4))
+    both = o.unionByName(o.select(F.col("dst").alias("src"),
+                                  F.col("src").alias("dst"), "weight"))
+    for kw, sym in (({}, G.symmetrize(o, assume_oriented=True)),
+                    ({"weight": "weight"}, both)):
+        want = {r.node: r.rank
+                for r in G.pagerank(sym, iterations=5, **kw).collect()}
+        got = {r.node: r.rank
+               for r in G.pagerank(o, iterations=5, undirected=True,
+                                   **kw).collect()}
+        assert set(got) == set(want)
+        for n, v in want.items():
+            assert got[n] == pytest.approx(v, abs=1e-12), (kw, n)
+
 
 def _brute_k_core(pairs, k):
     """Independent pure-Python peeling reference."""

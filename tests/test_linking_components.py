@@ -76,6 +76,70 @@ def test_wide_bucket_metric(spark):
     bands = L.surface_bands(df)
     assert L.wide_bucket_count(bands) == L.N_BANDS
     assert L.candidate_pairs(bands).count() == 0  # capped, not quadratic
+    # the bucket pass applies the same cap
+    mentions = df.withColumn("entity_group", F.lit("ORGANIZATION"))
+    assert L.match_edges(mentions).count() == 0
+
+
+def _jaccard(na, nb):
+    sa, sb = L.shingles(na), L.shingles(nb)
+    inter = len(sa & sb)
+    return inter / (len(sa) + len(sb) - inter) if inter else 0.0
+
+
+def test_match_edges_equals_candidate_pair_plan(spark):
+    """The bucket pass equals the plan it replaced, row for row:
+    candidate_pairs over the surface bands, the same-type filter, then
+    exact Jaccard >= threshold.  The fixture has a bucket wider than
+    MAX_BUCKET, two types sharing every bucket, pairs on both sides of
+    the threshold (one exactly on it), pairs sharing many bands, an
+    identifier type that never links, and 3 input partitions."""
+    orgs = ["Vandelay Industries", "Vandelay Ind",      # j = 0.55
+            "Globex Corporation", "Globex Corp",        # j = 0.579
+            "Linda Kim Group", "Lindsay Kim Group",
+            "Hooli Inc", "Hooli Incorporated",          # j = 0.474
+            "Zurich Re", "Zurich Ins",                  # j = 0.5
+            "Umbrella Corp", "Umbrela Corp",            # 15 shared bands
+            "Alice Chen"]                               # also a PERSON
+    people = ["Alice Chen", "Alicia Chen", "Maria Garcia", "Mario Garcia",
+              "John Smith", "Jane Smith"]
+    rows = [(f"[ORGANIZATION-o{i:02d}]", s, "ORGANIZATION")
+            for i, s in enumerate(orgs)]
+    rows += [(f"[PERSON-p{i:02d}]", s, "PERSON")
+             for i, s in enumerate(people)]
+    # one bucket per band wider than the cap
+    rows += [(f"[ORGANIZATION-w{i:02d}]", "Same Name", "ORGANIZATION")
+             for i in range(L.MAX_BUCKET + 6)]
+    rows += [("[EMAIL_ADDRESS-e0]", "ann@acme.com", "EMAIL_ADDRESS"),
+             ("[EMAIL_ADDRESS-e1]", "anne@acme.com", "EMAIL_ADDRESS")]
+    mentions = spark.createDataFrame(
+        rows, "pseudo_key string, surface string, entity_group string"
+    ).repartition(3)
+
+    ents = (mentions.where(F.col("entity_group").isin(*L.LINKABLE_TYPES))
+            .select("pseudo_key", "surface"))
+    bands = L.surface_bands(ents)
+    assert L.wide_bucket_count(bands) == L.N_BANDS
+    pairs = L.candidate_pairs(bands).collect()
+    want = {}
+    for r in pairs:
+        if r.key_a.split("-")[0] == r.key_b.split("-")[0]:
+            j = _jaccard(r.norm_a, r.norm_b)
+            if j >= 0.55:
+                want[(r.key_a, r.key_b)] = j
+    # a cross-type candidate exists and is filtered out
+    assert any(r.key_a.split("-")[0] != r.key_b.split("-")[0]
+               for r in pairs)
+
+    got = L.match_edges(mentions).collect()
+    assert len(got) == len({(r.key_a, r.key_b) for r in got})
+    assert {(r.key_a, r.key_b): r.jaccard for r in got} == want
+    linked = {frozenset((r.key_a, r.key_b)) for r in got}
+    assert frozenset(("[ORGANIZATION-o00]", "[ORGANIZATION-o01]")) in linked
+    assert frozenset(("[ORGANIZATION-o08]", "[ORGANIZATION-o09]")) \
+        not in linked
+    assert not any(k.startswith("[ORGANIZATION-w") for p in linked
+                   for k in p)
 
 
 # --- connected components (FIXTURES.md §6 component fixtures) -------------
